@@ -2,10 +2,13 @@ package graft.serve
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import graft.model.ColumnProfile
 
@@ -35,8 +38,17 @@ import graft.model.ColumnProfile
   * framework dependency. Binds loopback by default: this is a driver-side
   * control endpoint (profiling runs as Spark jobs on the cluster), not a
   * data-plane service; put real auth in front before binding wider.
-  * Profiling is driver-coordinated and the engine is thread-safe, so the
-  * default executor's concurrency is fine at control-plane request rates.
+  *
+  * Requests run on a pool of `defaultParallelism` daemon threads named
+  * `profile-server-N`, not on the JDK's single dispatcher thread, so the
+  * small Spark jobs of concurrent requests overlap across the cores and a
+  * slow client body holds one pool thread, not the whole server. That holds
+  * while fewer than `defaultParallelism` clients stall: there is no request
+  * read timeout, so that many stalled bodies hold every thread. The
+  * profiler is thread-safe. Threads start on demand and exit after
+  * [[IdleThreadSeconds]] idle, so a stopped server leaves none behind. Each
+  * `/profile` and `/upload` request runs its Spark jobs under its own job
+  * group, `serve:<endpoint>:<seq>`.
   */
 object ProfileServer {
 
@@ -167,6 +179,33 @@ object ProfileServer {
     case _ => None
   }
 
+  /** Seconds a request thread may sit idle before it exits. */
+  private val IdleThreadSeconds = 10L
+
+  private val requestThreads = new AtomicInteger()
+
+  /** A fixed pool of `size` daemon request threads, created on demand. */
+  private def requestPool(size: Int): ThreadPoolExecutor = {
+    val pool = new ThreadPoolExecutor(size, size, IdleThreadSeconds, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"profile-server-${requestThreads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** Run `body` under a fresh job group `serve:<endpoint>:<seq>`. A pool
+    * thread would otherwise keep the job group it inherited from the thread
+    * that created it.
+    */
+  private def inJobGroup(sc: SparkContext, endpoint: String, seq: AtomicLong)(body: => Unit): Unit = {
+    sc.setJobGroup(s"serve:$endpoint:${seq.incrementAndGet()}", s"ProfileServer /$endpoint")
+    try body
+    finally sc.clearJobGroup()
+  }
+
   /** Start the server; `port = 0` picks an ephemeral port (tests). Returns
     * the running server — callers stop it with `.stop(0)`.
     */
@@ -176,18 +215,31 @@ object ProfileServer {
       host: String = "127.0.0.1",
       maxUploadBytes: Long = DefaultMaxUploadBytes,
       uploadDir: String = sys.props("java.io.tmpdir") + "/graft_uploads"
-  ): HttpServer = {
+  ): HttpServer =
     // the same env-configured engine choice as the CLI, via the ONE shared
     // factory (`Main.engineFor`) so the two surfaces cannot drift
-    val run = graft.Main.engineFor(graft.Main.aiProviders())
+    startWith(spark, graft.Main.engineFor(graft.Main.aiProviders()), port, host, maxUploadBytes, uploadDir)
+
+  /** [[start]] with a given profiling engine. */
+  private[graft] def startWith(
+      spark: SparkSession,
+      run: DataFrame => graft.model.ClassificationResult,
+      port: Int,
+      host: String,
+      maxUploadBytes: Long,
+      uploadDir: String
+  ): HttpServer = {
     val engine: DataFrame => Seq[graft.model.ColumnProfile] =
       df => run(df).columnProfiles
+    val sc = spark.sparkContext
+    val requests = new AtomicLong()
     val server = HttpServer.create(new InetSocketAddress(host, port), 0)
+    server.setExecutor(requestPool(sc.defaultParallelism))
     server.createContext("/health", new HttpHandler {
       def handle(ex: HttpExchange): Unit = respond(ex, 200, """{"status":"ok"}""")
     })
     server.createContext("/profile", new HttpHandler {
-      def handle(ex: HttpExchange): Unit =
+      def handle(ex: HttpExchange): Unit = inJobGroup(sc, "profile", requests) {
         pathOf(ex) match {
           case None =>
             respond(ex, 400, err("missing 'path' (query param or JSON body)"))
@@ -202,15 +254,16 @@ object ProfileServer {
                 respond(ex, 500, err(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).takeWhile(_ != '\n')}"))
             }
         }
+      }
     })
     server.createContext("/upload", new HttpHandler {
-      def handle(ex: HttpExchange): Unit = {
-        if (ex.getRequestMethod != "POST")
-          return respond(ex, 405, err("upload is POST-only"))
+      def handle(ex: HttpExchange): Unit = inJobGroup(sc, "upload", requests) {
         val format = queryParam(ex, "format").getOrElse("")
-        if (format != "csv" && format != "jsonl")
-          return respond(ex, 400, err("unsupported or missing format (csv|jsonl)"))
-        readCapped(ex.getRequestBody, maxUploadBytes) match {
+        if (ex.getRequestMethod != "POST")
+          respond(ex, 405, err("upload is POST-only"))
+        else if (format != "csv" && format != "jsonl")
+          respond(ex, 400, err("unsupported or missing format (csv|jsonl)"))
+        else readCapped(ex.getRequestBody, maxUploadBytes) match {
           case None =>
             respond(ex, 400, err(s"payload exceeds MAX_FILE_SIZE ($maxUploadBytes bytes)"))
           case Some(bytes) if bytes.isEmpty =>
@@ -224,27 +277,30 @@ object ProfileServer {
               // overwrites (or races a second server sharing the dir)
               val file =
                 java.nio.file.Files.createTempFile(dir.toPath, "upload_", s".$format").toFile
-              try {
-                java.nio.file.Files.write(file.toPath, bytes)
-                parseUpload(spark, file.getAbsolutePath, format) match {
-                  case None =>
-                    respond(ex, 400, err("no parseable rows in upload"))
-                  case Some((df, quarantined, release)) =>
-                    val profiles =
-                      try engine(df)
-                      finally release()
-                    val o = mapper.createObjectNode()
-                    o.put("rows", profiles.headOption.map(_.totalRows).getOrElse(0L))
-                    o.put("quarantined", quarantined)
-                    o.set[com.fasterxml.jackson.databind.JsonNode](
-                      "profiles", mapper.readTree(profilesToJson(profiles)))
-                    respond(ex, 200, mapper.writeValueAsString(o))
-                }
-              } finally
-                // profiling is complete (engine() is eager) — without this a
-                // long-running service accumulates 16MB files until the tmp
-                // filesystem fills
-                file.delete()
+              val (status, reply) =
+                try {
+                  java.nio.file.Files.write(file.toPath, bytes)
+                  parseUpload(spark, file.getAbsolutePath, format) match {
+                    case None =>
+                      (400, err("no parseable rows in upload"))
+                    case Some((df, quarantined, release)) =>
+                      val profiles =
+                        try engine(df)
+                        finally release()
+                      val o = mapper.createObjectNode()
+                      o.put("rows", profiles.headOption.map(_.totalRows).getOrElse(0L))
+                      o.put("quarantined", quarantined)
+                      o.set[com.fasterxml.jackson.databind.JsonNode](
+                        "profiles", mapper.readTree(profilesToJson(profiles)))
+                      (200, mapper.writeValueAsString(o))
+                  }
+                } finally
+                  // profiling is complete (engine() is eager), and the file
+                  // goes BEFORE the reply, so a client that has its reply
+                  // never sees it — without this a long-running service
+                  // accumulates 16MB files until the tmp filesystem fills
+                  file.delete()
+              respond(ex, status, reply)
             } catch {
               case e: Exception =>
                 respond(ex, 500, err(s"${e.getClass.getSimpleName}: " +

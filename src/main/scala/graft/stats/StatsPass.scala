@@ -1,5 +1,6 @@
 package graft.stats
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StructField}
@@ -42,7 +43,8 @@ import scala.util.{Failure, Success, Try}
   *
   * All batch jobs are submitted concurrently (Spark's scheduler interleaves
   * their stages across the executor pool), so wall-clock ≈ the slowest batch,
-  * not the sum.
+  * not the sum. Each job carries its caller's job group, description and
+  * tags (see [[callerFuture]]).
   *
   * Small-input parallelism: a table that arrives as fewer scan partitions
   * than the cluster has cores (e.g. one parquet row group — row-group
@@ -167,9 +169,10 @@ object StatsPass {
       else Seq(perColumn) // approx_count_distinct: no Expand, one job is fine
 
     implicit val ec: ExecutionContext = ExecutionContext.global
+    val sc = df.sparkSession.sparkContext
 
     val distinctF = Future.traverse(distinctBatches) { batch =>
-      Future {
+      callerFuture(sc) {
         val aggs = batch.map { case (f, i) => distinctAggFor(f, i, config) }
         data.agg(aggs.head, aggs.tail: _*).collect()(0)
       }
@@ -197,7 +200,7 @@ object StatsPass {
 
     // --- low-card columns: pattern bank over DISTINCT VALUES, count-weighted
     val lowF = Future.traverse(lowCard) { case (f, i) =>
-      Future { lowCardPatternRow(data, f, i, config) }
+      callerFuture(sc)(lowCardPatternRow(data, f, i, config))
     }
 
     // --- high-card columns: full scan (or seeded sample) in codegen batches
@@ -207,7 +210,7 @@ object StatsPass {
     }
     val highBatches = highCard.grouped(colsPerBatch).toSeq
     val regexF = Future.traverse(highBatches) { batch =>
-      Future {
+      callerFuture(sc) {
         val aggs = count(lit(1)).as("__total") +: batch.flatMap { case (f, i) => patternAggsFor(f, i, config) }
         regexData.agg(aggs.head, aggs.tail: _*).collect()(0)
       }
@@ -216,7 +219,7 @@ object StatsPass {
     // or when every column went low-card but we still want a canonical total
     val needCountJob = config.patternSampleFraction.isDefined && highCard.nonEmpty
     val countF: Option[Future[Row]] =
-      if (needCountJob) Some(Future {
+      if (needCountJob) Some(callerFuture(sc) {
         val aggs = count(lit(1)).as("__total") +: highCard.map { case (f, i) =>
           count(rawCol(f)).as(s"c${i}__nn")
         }
@@ -260,6 +263,29 @@ object StatsPass {
         sampleValues = samples.getOrElse(f.name, Seq.empty),
         patternDenominator = sampledNn
       )
+    }
+  }
+
+  /** The Spark local properties a measurement job takes from the thread that
+    * asked for it. Never `spark.sql.execution.id`: each collect opens its own
+    * SQL execution.
+    */
+  private val CallerProps =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel", "spark.job.tags")
+
+  /** A future that runs `body` under the caller's [[CallerProps]]. A pool
+    * thread inherits Spark's thread-local properties once, from whichever
+    * thread created it, so without this a job would book to that thread's
+    * job group and `cancelJobGroup` on the caller would miss it. The worker's
+    * own values are restored afterwards.
+    */
+  private def callerFuture[T](sc: SparkContext)(body: => T)(implicit ec: ExecutionContext): Future[T] = {
+    val caller = CallerProps.map(k => k -> sc.getLocalProperty(k))
+    Future {
+      val own = CallerProps.map(k => k -> sc.getLocalProperty(k))
+      caller.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try body
+      finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     }
   }
 
@@ -321,7 +347,7 @@ object StatsPass {
     val batches = perColumn.grouped(config.maxDistinctPerJob).toSeq
     implicit val ec: ExecutionContext = ExecutionContext.global
     val rowsF = Future.traverse(batches) { batch =>
-      Future {
+      callerFuture(df.sparkSession.sparkContext) {
         val aggs = count(lit(1)).as("__total") +: batch.flatMap { case (f, i) =>
           Seq(count(rawCol(f)).as(s"c${i}__nn"), distinctAggFor(f, i, config))
         }

@@ -167,13 +167,15 @@ object DataVault {
   val relationalTables: Seq[String] =
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
+  /** A key column's name after its table-prefix underscore: its suffix class. */
+  private def suffix(c: String): String = c.substring(c.indexOf('_') + 1)
+
   /** Static candidate enumeration: key-suffixed columns (name after the
     * table-prefix underscore ends in "key") matched across tables by suffix
     * equality. Purely name-driven — the DATA then decides containment and
     * uniqueness, so both engines derive is_fk independently.
     */
   def candidatePairs: Seq[(String, String, String, String)] = {
-    def suffix(c: String): String = c.substring(c.indexOf('_') + 1)
     val keyCols = for {
       t <- relationalTables
       c <- Tables.columns(t)
@@ -185,6 +187,15 @@ object DataVault {
       if ct != pt && cs == ps
     } yield (ct, cc, pt, pc)
   }
+
+  /** Fails with a named error if a candidate pair joins columns of two
+    * suffix classes: [[fkCandidates]] aggregates each class separately, so
+    * such a pair would have no orphan count to read back.
+    */
+  private[graft] def requireOneSuffixClass(pairs: Seq[(String, String, String, String)]): Unit =
+    for ((ct, cc, pt, pc) <- pairs)
+      require(suffix(cc) == suffix(pc),
+        s"fk candidate $ct.$cc -> $pt.$pc spans suffix classes '${suffix(cc)}' and '${suffix(pc)}'")
 
   /** One row per candidate: orphan count (child values missing from parent),
     * parent uniqueness, and the resulting is_fk verdict.
@@ -199,6 +210,8 @@ object DataVault {
     */
   def fkCandidates(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val pairs = candidatePairs
+    requireOneSuffixClass(pairs)
     val dfs = relationalTables.map(t => t -> Tables.load(spark, dir, t)).toMap
 
     // One pivoted value-count relation per SUFFIX CLASS replaces all the
@@ -217,8 +230,7 @@ object DataVault {
     //     (count == count_distinct, both ignoring NULLs like the originals).
     // All class aggregates union into ONE collect of |classes| rows.
     val byClass: Seq[(String, Seq[(String, String)])] = {
-      def suffix(c: String): String = c.substring(c.indexOf('_') + 1)
-      val members = candidatePairs
+      val members = pairs
         .flatMap { case (ct, cc, pt, pc) => Seq((ct, cc), (pt, pc)) }
         .distinct
       members.groupBy { case (_, c) => suffix(c) }.toSeq.sortBy(_._1)
@@ -233,7 +245,7 @@ object DataVault {
       val counts = tagged
         .groupBy(col("v"))
         .agg(memberCounts.head, memberCounts.tail: _*)
-      val pairAggs = candidatePairs.zipWithIndex.flatMap { case ((ct, cc, pt, pc), pi) =>
+      val pairAggs = pairs.zipWithIndex.flatMap { case ((ct, cc, pt, pc), pi) =>
         val ci = members.indexOf((ct, cc))
         val piIdx = members.indexOf((pt, pc))
         if (ci < 0 || piIdx < 0) None // pair belongs to another class
@@ -260,8 +272,7 @@ object DataVault {
       .map(r => r.getString(0) -> r.getMap[String, Long](1).toMap)
       .toMap
 
-    def suffix(c: String): String = c.substring(c.indexOf('_') + 1)
-    val rows = candidatePairs.zipWithIndex.map { case ((ct, cc, pt, pc), pi) =>
+    val rows = pairs.zipWithIndex.map { case ((ct, cc, pt, pc), pi) =>
       val cls     = classRows(suffix(cc))
       val members = byClass.find(_._1 == suffix(cc)).get._2
       val piIdx   = members.indexOf((pt, pc))

@@ -68,6 +68,15 @@ class DataVaultSpec extends AnyFunSuite {
       assert(!v, s"false FK $k")
   }
 
+  test("fkCandidates: a candidate pair spanning suffix classes is a named error") {
+    DataVault.requireOneSuffixClass(DataVault.candidatePairs)
+    val e = intercept[IllegalArgumentException] {
+      DataVault.requireOneSuffixClass(Seq(("orders", "o_custkey", "customer", "c_nationkey")))
+    }
+    assert(e.getMessage.contains("orders.o_custkey -> customer.c_nationkey"), e.getMessage)
+    assert(e.getMessage.contains("'custkey'") && e.getMessage.contains("'nationkey'"), e.getMessage)
+  }
+
   test("scd2 episodes: runs collapse, changes open new episodes, valid_to chains") {
     import spark.implicits._
     def t(d: Int) = java.sql.Timestamp.valueOf(f"2024-01-$d%02d 00:00:00")

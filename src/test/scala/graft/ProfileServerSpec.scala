@@ -21,10 +21,14 @@ class ProfileServerSpec extends AnyFunSuite {
   private def call(
       path: String,
       method: String = "GET",
-      body: Option[String] = None
+      body: Option[String] = None,
+      at: String = base,
+      timeoutMs: Int = 0
   ): (Int, String) = {
-    val conn = URI.create(s"$base$path").toURL.openConnection().asInstanceOf[HttpURLConnection]
+    val conn = URI.create(s"$at$path").toURL.openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod(method)
+    conn.setConnectTimeout(timeoutMs)
+    conn.setReadTimeout(timeoutMs)
     body.foreach { b =>
       conn.setDoOutput(true)
       val os = conn.getOutputStream
@@ -67,8 +71,13 @@ class ProfileServerSpec extends AnyFunSuite {
     assert(call("/profile?path=/no/such/data.parquet")._1 == 404)
   }
 
+  private val csv = "user_id,email\n1,a@example.com\n2,b@example.com\n3,c@example.com\n"
+  private val jsonl = """{"doc_id": 1, "text": "hello world"}
+                        |NOT VALID JSON {{{
+                        |{"doc_id": 2, "text": "goodbye"}
+                        |""".stripMargin
+
   test("POST /upload profiles inline CSV content") {
-    val csv = "user_id,email\n1,a@example.com\n2,b@example.com\n3,c@example.com\n"
     val (status, body) = call("/upload?format=csv", "POST", Some(csv))
     assert(status == 200, body)
     val node = mapper.readTree(body)
@@ -83,10 +92,6 @@ class ProfileServerSpec extends AnyFunSuite {
   }
 
   test("POST /upload quarantines malformed JSONL lines instead of failing") {
-    val jsonl = """{"doc_id": 1, "text": "hello world"}
-                  |NOT VALID JSON {{{
-                  |{"doc_id": 2, "text": "goodbye"}
-                  |""".stripMargin
     val (status, body) = call("/upload?format=jsonl", "POST", Some(jsonl))
     assert(status == 200, body)
     val node = mapper.readTree(body)
@@ -148,5 +153,65 @@ class ProfileServerSpec extends AnyFunSuite {
       call("/profile?path=/root/testdata/sf0.001/region.parquet", "POST", Some("NOT JSON {{{"))
     assert(status == 200, body)
     assert(mapper.readTree(body).size() == 2)
+  }
+
+  test("a stalled upload body holds one request thread, not the server") {
+    // headers and half of a declared body, then silence
+    val stalled = new java.net.Socket("127.0.0.1", server.getAddress.getPort)
+    try {
+      val out = stalled.getOutputStream
+      out.write(("POST /upload?format=csv HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        "Content-Length: 1000\r\n\r\nuser_id,email\n1,a@example.com\n").getBytes(StandardCharsets.UTF_8))
+      out.flush()
+      assert(call("/health", timeoutMs = 5000)._1 == 200)
+    } finally stalled.close()
+  }
+
+  test("each request runs its Spark jobs under its own serve:<endpoint>:<seq> job group") {
+    val groups = SparkTestBase.jobGroupsOf {
+      assert(call(s"/profile?path=${SurfacePlans.dir}/region.parquet")._1 == 200)
+      assert(call("/upload?format=csv", "POST", Some(csv))._1 == 200)
+    }
+    assert(groups.forall(_.matches("serve:(profile|upload):\\d+")), groups.distinct.mkString(", "))
+    assert(groups.distinct.count(_.startsWith("serve:profile:")) == 1)
+    assert(groups.distinct.count(_.startsWith("serve:upload:")) == 1)
+  }
+
+  test("concurrent /profile and /upload replies equal the same requests sent alone") {
+    val engine = new graft.engine.ProfilerEngine()
+    val dir = java.nio.file.Files.createTempDirectory("graft_upload_spec").toFile
+    val s = graft.serve.ProfileServer.startWith(spark, engine.analyzeDataFrame, 0, "127.0.0.1",
+      graft.serve.ProfileServer.DefaultMaxUploadBytes, dir.getAbsolutePath)
+    try {
+      val at = s"http://127.0.0.1:${s.getAddress.getPort}"
+      val requests =
+        Seq("customer", "lineitem", "nation", "orders", "part", "region", "supplier", "events")
+          .map(t => (s"/profile?path=${SurfacePlans.dir}/$t.parquet", "GET", Option.empty[String])) ++
+          Seq(("/upload?format=csv", "POST", Some(csv)), ("/upload?format=jsonl", "POST", Some(jsonl)))
+      def send(r: (String, String, Option[String])): (Int, String) = call(r._1, r._2, r._3, at)
+
+      val alone = requests.map(send)
+      assert(alone.forall(_._1 == 200), alone.filter(_._1 != 200).mkString("; "))
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val clients = java.util.concurrent.Executors.newFixedThreadPool(requests.size)
+      val together =
+        try {
+          val replies = requests.map(r => clients.submit(() => { start.await(); send(r) }))
+          start.countDown()
+          replies.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+        } finally clients.shutdownNow()
+      for ((r, (a, t)) <- requests.zip(alone.zip(together)))
+        assert(t == a, s"${r._1}: concurrent reply differs from the lone one")
+
+      // every request profiled every column exactly once, twice over
+      val columns = alone.map { case (_, body) =>
+        val node = mapper.readTree(body)
+        (if (node.isArray) node else node.path("profiles")).size().toLong
+      }.sum
+      assert(engine.classificationStats == Map(
+        "total_columns_analyzed" -> 2 * columns,
+        "successful_classifications" -> 2 * columns,
+        "failed_classifications" -> 0L))
+    } finally s.stop(0)
   }
 }

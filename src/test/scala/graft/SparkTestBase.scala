@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 /** One shared local SparkSession for the whole test JVM. */
 object SparkTestBase {
@@ -29,5 +32,39 @@ object SparkTestBase {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
     s
+  }
+
+  /** The job group (`""` when none) of every Spark job that starts while
+    * `body` runs, in start order. Suites run one at a time, so no other job
+    * starts in between.
+    */
+  def jobGroupsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the listener bus delivers events in order: once the marker job's
+      // start arrives, so has the start of every job `body` ran
+      val t = new Thread(() => {
+        sc.setJobGroup(marker, marker)
+        sc.parallelize(Seq(1), 1).count()
+      })
+      t.start()
+      t.join()
+      val seen = Seq.newBuilder[String]
+      var g = started.poll(60, TimeUnit.SECONDS)
+      while (g != null && g != marker) {
+        seen += g
+        g = started.poll(60, TimeUnit.SECONDS)
+      }
+      require(g == marker, "listener bus did not deliver the marker job within 60 s")
+      seen.result()
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -99,4 +99,27 @@ class StatsPassSpec extends AnyFunSuite {
     assert(StatsPass.compute(empty).isEmpty)
     assert(StatsPass.computeBasic(empty).isEmpty)
   }
+
+  test("measurement jobs book to their caller's job group, whatever pool thread runs them") {
+    val sc = spark.sparkContext
+    for (g <- Seq("g1", "g2", "g3")) {
+      val group = s"statspass-$g"
+      @volatile var failure: Option[Throwable] = None
+      val groups = SparkTestBase.jobGroupsOf {
+        // a fresh thread per call: the global pool's workers were created by
+        // some other thread, under some other (or no) job group
+        val t = new Thread(() =>
+          try {
+            sc.setJobGroup(group, group)
+            StatsPass.compute(wide)
+            StatsPass.computeBasic(wide)
+          } catch { case e: Throwable => failure = Some(e) })
+        t.start()
+        t.join()
+      }
+      failure.foreach(throw _)
+      assert(groups.nonEmpty)
+      assert(groups.forall(_ == group), s"$group's jobs booked to ${groups.distinct.mkString(", ")}")
+    }
+  }
 }
