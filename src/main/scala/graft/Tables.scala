@@ -115,8 +115,8 @@ object Tables {
   /** Columns whose DISTINCT count the oracle takes over the VARCHAR
     * rendering instead of the native value. Two cases:
     *   - MAP columns (events.props): Spark cannot hash/compare MapType in
-    *     aggregates, so the stats pass distinct-counts the string rendering
-    *     (StatsPass.distinctAggFor) and the oracle mirrors it — both sides
+    *     aggregates, so the stats pass groups on the string rendering
+    *     (StatsPass.keyType) and the oracle mirrors it — both sides
     *     count distinct renderings (injective for these fixtures).
     *   - ARRAY<FLOAT> columns (embeddings.embedding): Spark distinct-counts
     *     the native array; DuckDB's native list distinct would too, but the

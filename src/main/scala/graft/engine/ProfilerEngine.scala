@@ -36,10 +36,10 @@ final case class ProfileRow(
 /** The pattern-based profiling engine (reference: `PatternClassifier`,
   * `pattern_classifier.py:18-137`, rebuilt per SURVEY.md §3.3/§4.3).
   *
-  * One Spark job measures all columns ([[graft.stats.StatsPass]]); the
-  * decision cascade ([[graft.pattern.PatternRules]]) then runs driver-side on
-  * a single collected stats row per table. Driver work is O(columns), never
-  * O(rows).
+  * One grouped pass per 8 columns measures the table
+  * ([[graft.stats.StatsPass]]); the decision cascade
+  * ([[graft.pattern.PatternRules]]) then runs driver-side on one collected
+  * stats row per column. Driver work is O(columns), never O(rows).
   */
 class ProfilerEngine(val statsConfig: StatsPass.Config = StatsPass.Config()) {
 

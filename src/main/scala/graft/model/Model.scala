@@ -113,7 +113,7 @@ final case class ResultSummary(
     classificationMethod: String
 )
 
-/** Raw per-column measurements produced by the single-pass stats job
+/** Raw per-column measurements produced by the grouped stats pass
   * (graft.stats.StatsPass) — everything the decision cascade needs.
   *
   * All counts are exact longs; ratios are derived lazily so threshold
@@ -129,23 +129,16 @@ final case class ColumnStats(
     nonNullCount: Long,
     uniqueCount: Long,
     patternMatches: Map[String, Long],
-    sampleValues: Seq[String] = Seq.empty,
-    /** When the pattern measurement ran over a sample (StatsPass
-      * `patternSampleFraction`), the sample's non-null count — the correct
-      * denominator for `matchRatio`. None = full-scan measurement.
-      */
-    patternDenominator: Option[Long] = None
+    sampleValues: Seq[String] = Seq.empty
 ) {
   def nullCount: Long = totalRows - nonNullCount
   def nullRatio: Double = if (totalRows > 0) nullCount.toDouble / totalRows else 0.0
   def uniqueRatio: Double = if (totalRows > 0) uniqueCount.toDouble / totalRows else 0.0
 
-  /** Fraction of the (measured) non-null values matching `patternKey`; 0 when
-    * the column is all-null (mirrors the reference's empty-sample behavior).
+  /** Fraction of the non-null values matching `patternKey`; 0 when the
+    * column is all-null (mirrors the reference's empty-sample behavior).
     */
-  def matchRatio(patternKey: String): Double = {
-    val denom = patternDenominator.getOrElse(nonNullCount)
-    if (denom > 0) patternMatches.getOrElse(patternKey, 0L).toDouble / denom
+  def matchRatio(patternKey: String): Double =
+    if (nonNullCount > 0) patternMatches.getOrElse(patternKey, 0L).toDouble / nonNullCount
     else 0.0
-  }
 }

@@ -57,7 +57,7 @@ class MainSourceLintSpec extends AnyFunSuite {
     "stats/MergeableStats.scala" ->
       (1, "single merged-partials row"),
     "stats/StatsPass.scala" ->
-      (6, "1-row profiling aggregates (one per pass/refinement)"),
+      (3, "grouped pass: ≤ maxDistinctPerJob rows, one per column; 1-row approx-distinct aggregate; 1-row sample capture"),
     "vault/DataVault.scala" ->
       (1, "fkCandidates: ONE |suffix-classes|-row collect of per-class 1-row pivot aggregates (orphan counts + uniqueness, r19)"),
     "similarity/KMeans.scala" ->

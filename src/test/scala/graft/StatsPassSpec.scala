@@ -1,22 +1,27 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.ColumnStats
+import graft.pattern.PatternRules
 import graft.stats.StatsPass
 
-/** Physical-plan-shape knobs of the measurement layer: expression batching,
-  * the distinct/regex job split, approximate-distinct mode, and the
-  * counts-only pass. Correctness of the measurements themselves is covered
-  * by the oracle gate; these specs pin the invariants the batching must
-  * preserve.
+/** The measurement layer: the grouped pass against a per-row reference,
+  * batching, generated-code stability, approximate-distinct mode, and the
+  * counts-only pass. The oracle gate covers the declared profile queries;
+  * these specs pin the invariants the grouped pass must preserve.
   */
 class StatsPassSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  /** 12 columns — more than one regex batch (80/20 exprs → 4 cols/job) and
-    * more than one distinct batch (8/job).
-    */
+  private val dir = SurfacePlans.dir
+
+  /** 12 columns — more than one grouped pass (8 columns each). */
   private lazy val wide = {
     val rows = (1 to 50).map { i =>
       (i, s"u$i@x.com", s"2023-01-${10 + i % 20}", i % 3, i.toDouble, s"T$i",
@@ -25,11 +30,103 @@ class StatsPassSpec extends AnyFunSuite {
     rows.toDF("id", "email", "day", "grp", "amt", "code", "flag", "name", "dbl", "cat", "val", "mod")
   }
 
+  /** The per-row reference: one column at a time, [[StatsPass.patternAggsFor]]
+    * plus a single-column `count_distinct` (one distinct aggregate plans
+    * without an `Expand`). Maps are distinct-counted on their rendering.
+    */
+  private def reference(df: DataFrame): Seq[ColumnStats] =
+    df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      val c = col(s"`${f.name}`")
+      val target = f.dataType match {
+        case _: MapType => c.cast("string")
+        case _          => c
+      }
+      val aggs = count(lit(1)).as("total") +: count_distinct(target).as("uniq") +:
+        StatsPass.patternAggsFor(f, i, StatsPass.Config())
+      val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+      def get(n: String): Long = {
+        val x = r.fieldIndex(n)
+        if (r.isNullAt(x)) 0L else r.getLong(x)
+      }
+      ColumnStats(f.name, get("total"), get(s"c${i}__nn"), get("uniq"),
+        PatternRules.measuredPatterns.map(p => p.key -> get(s"c${i}__${p.key}")).toMap)
+    }
+
+  private def assertMatchesReference(df: DataFrame, what: String): Unit = {
+    val ref = reference(df)
+    assert(StatsPass.compute(df) == ref, what)
+    assert(StatsPass.computeBasic(df) == ref.map(_.copy(patternMatches = Map.empty)), what)
+  }
+
+  test("grouped pass equals the per-row reference on every sf0.001 table") {
+    val tables = new java.io.File(dir).list().toSeq.filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
+    assert(tables.size >= 10)
+    for (t <- tables.sorted) assertMatchesReference(Tables.load(spark, dir, t), t)
+  }
+
+  test("grouped pass equals the per-row reference on signed zeros, NaN, decimals, dates, maps and vectors") {
+    val df = spark.sql(
+      """select * from values
+        |  (cast('-0.0' as double), cast('-0.0' as float), 1.10bd, date'2023-01-15', '', map('a', 1), array(0.5f, -0.0f)),
+        |  (0.0d, 0.0f, 1.10bd, date'2023-01-15', '', map('a', 1), array(0.5f, -0.0f)),
+        |  (cast('-0.0' as double), 2.5f, -3.25bd, date'1999-12-31', 'AB', map('b', 2), array(1.0f)),
+        |  (cast('NaN' as double), cast('NaN' as float), null, null, 'x', null, null),
+        |  (-cast('NaN' as double), null, 7bd, date'2023-01-16', null, map(), array()),
+        |  (null, null, null, null, null, null, null),
+        |  (12.0d, 12.0f, 12bd, date'2023-01-15', '12', map('a', 1, 'b', 2), array(0.0f))
+        |as t(d, f, dec, dt, s, m, emb)""".stripMargin)
+    assertMatchesReference(df, "mixed types")
+    val d = StatsPass.compute(df).find(_.name == "d").get
+    assert(d.nonNullCount == 6 && d.uniqueCount == 3) // ±0.0 one value, NaNs one value
+  }
+
+  test("no measured pattern tells the renderings 0.0 and -0.0 apart (grouping normalizes -0.0)") {
+    for (p <- PatternRules.measuredPatterns)
+      assert(p.regex.r.findFirstIn("0.0").isDefined == p.regex.r.findFirstIn("-0.0").isDefined, p.key)
+  }
+
+  test("grouped pass equals the per-row reference across batches and on a 0-row frame") {
+    assertMatchesReference(wide, "wide")
+    val none = wide.filter(lit(false))
+    assertMatchesReference(none, "0 rows")
+    val stats = StatsPass.compute(none)
+    assert(stats.map(_.name) == wide.columns.toSeq)
+    assert(stats.forall(s => s.totalRows == 0 && s.nonNullCount == 0 && s.uniqueCount == 0 &&
+      s.patternMatches.size == PatternRules.measuredPatterns.size && s.patternMatches.values.forall(_ == 0)))
+  }
+
+  test("an ungroupable VARIANT column is measured on its rendering and does not abort its neighbour") {
+    val df = spark.sql("""select 1 as id, parse_json('{"a":1}') as v""")
+    val idRef = reference(df.select("id")).head
+    val full  = StatsPass.compute(df)
+    val basic = StatsPass.computeBasic(df)
+    assert(full.map(_.name) == Seq("id", "v") && basic.map(_.name) == Seq("id", "v"))
+    assert(full.head == idRef && basic.head == idRef.copy(patternMatches = Map.empty))
+    for (v <- Seq(full(1), basic(1)))
+      assert((v.totalRows, v.nonNullCount, v.uniqueCount) == ((1L, 1L, 1L)))
+  }
+
+  test("a repeat profile of a fresh load of the same table compiles no new code") {
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val passes = Seq[(String, DataFrame => Seq[ColumnStats])](
+      "compute" -> (df => StatsPass.compute(df)),
+      "computeBasic" -> (df => StatsPass.computeBasic(df))
+    )
+    for ((name, pass) <- passes) {
+      pass(Tables.load(spark, dir, "lineitem"))
+      val before = compiles
+      pass(Tables.load(spark, dir, "lineitem"))
+      assert(compiles == before, s"$name compiled ${compiles - before} new classes on a repeat")
+    }
+  }
+
   test("batching preserves per-column results across batch boundaries") {
-    val tight = StatsPass.compute(wide, StatsPass.Config(maxAggExprsPerJob = 21, maxDistinctPerJob = 3))
-    val loose = StatsPass.compute(wide, StatsPass.Config(maxAggExprsPerJob = 1000, maxDistinctPerJob = 100))
+    val tight = StatsPass.compute(wide, StatsPass.Config(maxDistinctPerJob = 3))
+    val loose = StatsPass.compute(wide, StatsPass.Config(maxDistinctPerJob = 100))
     assert(tight.map(_.name) == wide.columns.toSeq)
     assert(tight == loose) // identical ColumnStats regardless of batch shape
+    assert(StatsPass.computeBasic(wide, StatsPass.Config(maxDistinctPerJob = 3)) ==
+      StatsPass.computeBasic(wide, StatsPass.Config(maxDistinctPerJob = 100)))
   }
 
   test("approximate-distinct mode fills uniqueCount without Expand, within rsd") {
