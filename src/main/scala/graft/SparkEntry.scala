@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPersist, SparkSession}
 
 import graft.engine.{OracleGen, ProfilerEngine}
 import graft.model.ColumnProfile
@@ -67,18 +67,65 @@ object SparkEntry {
       engine.analyzeDataFrame(Tables.load(noAqeSession(spark), dir, table)).columnProfiles
     )
 
-  /** One CC fixpoint per (session, dir) per JVM run: `dedup_clusters_documents`
-    * and `curated_documents` share the same label table (the loop's output is
+  /** The widened `documents` relation, one per (session, dir, input
+    * version) per JVM run, shared by the curation pass — `bigram_scores`,
+    * `dsir_weights`, `dsir_top`, `source_kl`, `spandedup`, `curated` and the
+    * [[clusterLabels]] cache — so the narrow scan is read and spread to
+    * cluster width once per pass instead of once per scorer. It is spread
+    * by hash of `doc_id`, the table's key, rather than [[Tables.widen]]'s
+    * round robin: as even for a key, and every consumer that groups or
+    * joins on `doc_id` then skips that exchange. The rows are kept by
+    * [[org.apache.spark.sql.GraftPersist]], a `persist` with lineage (the
+    * [[postingsCache]] precedent: lost blocks recompute after an executor
+    * loss) behind a plan leaf, so each consumer's inspected plan and its
+    * exchange/scan budgets stop at the shared rows. When `widen` would not
+    * repartition (the input already has `defaultParallelism` partitions)
+    * the artifact is the plain scan: a corpus is never copied to share a
+    * scan. The input version ([[Tables.inputVersion]]: the file listing's
+    * sizes and mtimes) is part of the key, so a rewritten table builds a
+    * fresh artifact and the stale one is unpersisted; [[clearCaches]] drops
+    * and unpersists them all. ROADMAP item 4's artifact registry will absorb
+    * this cache along with the other hand-rolled ones in this object.
+    */
+  private val documentsCache = TrieMap.empty[(String, String, String), DataFrame]
+
+  private def documentsKey(spark: SparkSession, dir: String): (String, String, String) =
+    (spark.sparkContext.applicationId, dir, Tables.inputVersion(spark, dir, "documents"))
+
+  private def widenedDocuments(spark: SparkSession, dir: String): DataFrame = {
+    val key = documentsKey(spark, dir)
+    documentsCache.getOrElse(key, documentsCache.synchronized {
+      // an older version of the same (session, dir) is stale: drop it and
+      // the labels built from it
+      def stale(k: (String, String, String)) = k != key && k._1 == key._1 && k._2 == key._2
+      for (k <- documentsCache.keys if stale(k))
+        documentsCache.remove(k).foreach(GraftPersist.unpersist)
+      clusterCache.keys.filter(stale).foreach(clusterCache.remove)
+      documentsCache.getOrElseUpdate(key, {
+        val raw  = Tables.load(spark, dir, "documents")
+        val wide = Tables.widen(raw)
+        if (wide eq raw) raw
+        else GraftPersist(
+          raw.repartition(spark.sparkContext.defaultParallelism, org.apache.spark.sql.functions.col("doc_id")))
+      })
+    })
+  }
+
+  /** One CC fixpoint per (session, dir, `documents` input version) per JVM
+    * run, built from [[widenedDocuments]]: `dedup_clusters_documents` and
+    * `curated_documents` share the same label table (the loop's output is
     * localCheckpointed, so reuse costs nothing) — the fixpoint is the
     * expensive stage and was executed twice in r3. Keyed on applicationId so
-    * a cached DataFrame is never handed to a different SparkSession.
+    * a cached DataFrame is never handed to a different SparkSession, and on
+    * the input version like [[documentsCache]], so labels never outlive the
+    * rows they label.
     */
-  private val clusterCache = TrieMap.empty[(String, String), DataFrame]
+  private val clusterCache = TrieMap.empty[(String, String, String), DataFrame]
 
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
     clusterCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      graft.dedup.DedupClusters.dedupClusters(Tables.load(spark, dir, "documents"))
+      documentsKey(spark, dir),
+      graft.dedup.DedupClusters.dedupClusters(widenedDocuments(spark, dir))
     )
 
   /** One shingle-postings exchange per (session, dir) per JVM run, persisted
@@ -240,12 +287,14 @@ object SparkEntry {
     */
   private[graft] val ProduceOnce: Set[String] = Set("bucketed_join_orders")
 
-  /** Drop every cross-query cache (profiles, cluster labels, centroids) —
-    * Bench calls this between repetition passes so each pass re-executes the
-    * shared stages instead of timing cache hits.
+  /** Drop every cross-query cache (profiles, the widened documents, cluster
+    * labels, centroids) — Bench calls this between repetition passes so each
+    * pass re-executes the shared stages instead of timing cache hits.
     */
   private[graft] def clearCaches(): Unit = {
     profileCache.clear()
+    documentsCache.values.foreach(GraftPersist.unpersist)
+    documentsCache.clear()
     clusterCache.clear()
     semanticClusterCache.clear()
     postingsCache.values.foreach(_.unpersist(blocking = false))
@@ -327,7 +376,7 @@ object SparkEntry {
       // bigram-LM conditional logprob — word-ORDER fluency, the KenLM-shaped
       // filter one step up from the unigram bag score (r11i)
       "bigram_scores_documents" -> ((s: SparkSession, d: String) =>
-        graft.text.BigramLm.bigramScores(docs(s, d))),
+        graft.text.BigramLm.bigramScores(widenedDocuments(s, d))),
       // blocklist phrase tagging via the replace-length identity — exact
       // integer hit counts, no regex dialect surface (r11i)
       "blocklist_documents" -> ((s: SparkSession, d: String) =>
@@ -335,7 +384,7 @@ object SparkEntry {
       // per-source KL divergence from the corpus token mixture — the
       // distribution-level "which feed drags the blend" read (r11i)
       "source_kl_documents" -> ((s: SparkSession, d: String) =>
-        graft.text.SourceDivergence.sourceKl(docs(s, d))),
+        graft.text.SourceDivergence.sourceKl(widenedDocuments(s, d))),
       // deterministic declared twins of the partition-parallel library ops
       // (r5 verdict asks #6/#8): global-order greedy packing + pinned
       // exact-by-construction Misra-Gries, both under the hash gate
@@ -362,11 +411,11 @@ object SparkEntry {
       // published importance-resampling scorer for domain/language-focused
       // subset selection (r7)
       "dsir_weights_documents" -> ((s: SparkSession, d: String) =>
-        graft.text.TextOps.dsirWeights(docs(s, d))),
+        graft.text.TextOps.dsirWeights(widenedDocuments(s, d))),
       // the selection step those weights exist for: importance-ranked top-N
       // cut (TakeOrdered, never a full corpus sort) (r9)
       "dsir_top_documents" -> ((s: SparkSession, d: String) =>
-        graft.text.TextOps.dsirTop(docs(s, d), SparkEntry.dsirTopN)),
+        graft.text.TextOps.dsirTop(widenedDocuments(s, d), SparkEntry.dsirTopN)),
       // Gopher-style conjunctive rule gate — thresholds sited where every
       // rule fires in both directions at sf0.01, so each boundary is
       // hash-checked (r7b)
@@ -459,7 +508,7 @@ object SparkEntry {
       // ExactSubstr span dedup: duplicated k-token spans keep only their
       // first corpus occurrence; documents re-stitched from survivors (r11h)
       "spandedup_documents" -> ((s: SparkSession, d: String) =>
-        graft.text.SpanDedup.spanDedup(docs(s, d)))
+        graft.text.SpanDedup.spanDedup(widenedDocuments(s, d)))
     )
     val sampling: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "sample_documents" -> ((s: SparkSession, d: String) =>
@@ -697,7 +746,7 @@ object SparkEntry {
       // the end-to-end curation composition (quality ∧ langid ∧ survivor);
       // reuses the cached cluster labels instead of re-running the CC loop
       "curated_documents" -> ((s: SparkSession, d: String) =>
-        graft.curation.Curation.curatedDocuments(docs(s, d), clusterLabels(s, d))),
+        graft.curation.Curation.curatedDocuments(widenedDocuments(s, d), clusterLabels(s, d))),
       // quality-argmax survivor per cluster: map-side-combinable min(struct),
       // not a window — hot clusters partially reduce before the exchange (r8)
       "best_survivors_documents" -> ((s: SparkSession, d: String) =>

@@ -183,6 +183,23 @@ object Tables {
     if (table == "events") normalizeEventTs(df) else df
   }
 
+  /** The version of a table's input: every file under its path with its
+    * size and modification time, in path order. Two reads of unchanged
+    * files give the same string; rewriting the table changes it. Caches of
+    * artifacts built from a table carry it in their key, so a long-lived
+    * session never serves a result of rows that are gone.
+    */
+  def inputVersion(spark: SparkSession, sfDir: String, table: String): String = {
+    val path  = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
+    val files = path.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(path, true)
+    val b     = Seq.newBuilder[String]
+    while (files.hasNext) {
+      val f = files.next()
+      b += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+    }
+    b.result().sorted.mkString(",")
+  }
+
   /** Pre-flight schema guard for the gate mains (`Verify`, `Bench`): compare
     * the static catalog against the live parquet footers BEFORE running any
     * query, and fail with a loud per-column message on drift. The r8 round

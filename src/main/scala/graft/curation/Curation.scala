@@ -24,8 +24,11 @@ import graft.text.TextOps
   * scalable plan (per-row quality/langid projections, bucketed pair
   * generation + bounded label propagation), and the final join keys on the
   * (already hash-distributed) doc_id. Filters are conjunctive so stage
-  * ORDER is a pure cost choice; the declared form filters after the join
-  * for one canonical shape.
+  * ORDER is a pure cost choice; the declared form cuts the labels to the
+  * survivors (cluster_id = doc_id) before the join, so the join has the
+  * one key doc_id — a docs side already partitioned by doc_id (the shared
+  * documents artifact in `SparkEntry`) then needs no exchange — and
+  * filters the per-doc classes after it.
   */
 object Curation {
 
@@ -41,15 +44,12 @@ object Curation {
     val q = TextOps.quality(docs).select(col("doc_id"), col("n_tokens"), col("quality_class"))
     val l = TextOps.langId(docs)
       .select(col("doc_id").as("l_doc_id"), col("lang"), col("pred_lang"))
-    val cl = clusters
-      .select(col("doc_id").as("c_doc_id"), col("cluster_id"))
+    val survivors = clusters
+      .where(col("cluster_id") === col("doc_id"))
+      .select(col("doc_id").as("c_doc_id"))
     q.join(l, q("doc_id") === l("l_doc_id"))
-      .join(cl, q("doc_id") === cl("c_doc_id"))
-      .where(
-        col("quality_class") =!= "poor" &&
-          col("pred_lang") =!= "und" &&
-          col("cluster_id") === col("doc_id")
-      )
+      .join(survivors, q("doc_id") === survivors("c_doc_id"))
+      .where(col("quality_class") =!= "poor" && col("pred_lang") =!= "und")
       .select(col("doc_id"), col("lang"), col("pred_lang"), col("quality_class"), col("n_tokens"))
       .orderBy("doc_id")
   }

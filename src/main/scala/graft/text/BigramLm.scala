@@ -20,43 +20,44 @@ import org.apache.spark.sql.functions._
   * declared column is the decimal's string, never a re-rounded float. The
   * one log10 per distinct bigram carries the accepted ≤1-ulp risk.
   *
-  * Scale shape: bigrams are a per-row generator (no shuffle); corpus bigram
-  * counts and context counts are two map-side-combinable aggregates (the
-  * second rolls up the first — it never rescans the corpus); the count
-  * tables join back onto the bigram stream hash-partitioned on the bigram
-  * string; the result is one row per document. Docs with <2 tokens score 0
-  * over 0 bigrams and stay in the output.
+  * Scale shape: bigrams are a per-row `explode_outer` generator (no
+  * shuffle) that yields one null row for a document with fewer than 2
+  * tokens, so every document stays in the one scoring stream. Corpus bigram
+  * counts are one map-side-combinable aggregate; the context count c(w₁·)
+  * is a window partitioned by w₁ over those ≤|bigram vocab| aggregated
+  * rows, never over the raw stream. The log-prob table left-joins back onto
+  * the stream, and one groupBy(doc_id) with count(bg) yields one row per
+  * document (doc_id is the table's key). No join recovers token-less
+  * documents: they score 0 over 0 bigrams from their null row.
   */
 object BigramLm {
 
   /** (doc_id, n_bigrams, sum_logprob_str) per document, doc_id order. */
   def bigramScores(docs0: DataFrame): DataFrame = {
-    val docs = graft.Tables.widen(docs0)
-    val toks = docs.select(col("doc_id"), split(TextOps.lowerSimple(col("text")), " ").as("ts"))
-    val bigrams = toks
-      .where(size(col("ts")) >= 2)
+    val bigrams = graft.Tables.widen(docs0)
+      .select(col("doc_id"), split(TextOps.lowerSimple(col("text")), " ").as("ts"))
       .select(
         col("doc_id"),
-        explode(expr(
-          "transform(sequence(0, size(ts) - 2), i -> struct(ts[i] AS w1, concat(ts[i], ' ', ts[i + 1]) AS bg))"
+        explode_outer(expr(
+          "IF(size(ts) >= 2, transform(sequence(0, size(ts) - 2), " +
+            "i -> struct(ts[i] AS w1, concat(ts[i], ' ', ts[i + 1]) AS bg)), NULL)"
         )).as("x"))
       .select(col("doc_id"), col("x.w1").as("w1"), col("x.bg").as("bg"))
-    val bgCounts  = bigrams.groupBy(col("bg"), col("w1")).agg(count(lit(1)).as("c_bg"))
-    val ctxCounts = bgCounts.groupBy(col("w1")).agg(sum(col("c_bg")).as("c_ctx"))
-    val perDoc = bigrams
-      .join(bgCounts, Seq("bg", "w1"))
-      .join(ctxCounts, Seq("w1"))
-      .select(
-        col("doc_id"),
+    val byW1 = org.apache.spark.sql.expressions.Window.partitionBy(col("w1"))
+    val logProbs = bigrams
+      .where(col("bg").isNotNull)
+      .groupBy(col("bg"), col("w1"))
+      .agg(count(lit(1)).as("c_bg"))
+      .select(col("bg"), col("w1"), col("c_bg"), sum(col("c_bg")).over(byW1).as("c_ctx"))
+      .select(col("bg"), col("w1"),
         expr("CAST(log10(CAST(c_bg AS DOUBLE) / c_ctx) AS DECIMAL(18,6))").as("lp"))
+    bigrams
+      .join(logProbs, Seq("bg", "w1"), "left")
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("sum_lp"))
-    docs
-      .select(col("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left")
+      .agg(count(col("bg")).as("n_bigrams"), sum(col("lp")).as("sum_lp"))
       .select(
         col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        col("n_bigrams"),
         coalesce(col("sum_lp"), lit(0).cast("decimal(18,6)"))
           .cast("decimal(28,6)").cast("string").as("sum_logprob_str"))
       .orderBy("doc_id")

@@ -1,6 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Per-source KL divergence from the corpus token mixture —
@@ -21,10 +22,17 @@ import org.apache.spark.sql.functions._
   * divergence is published as the exact decimal's string next to the
   * counts, not as a re-rounded float.
   *
-  * Scale shape: ONE token explode feeds both count relations ((source,
-  * token) and token), the ≤|vocab| corpus counts join back hash-partitioned
-  * on token, and the ≤|sources| totals broadcast. The final aggregate is
-  * |sources| rows. Nothing rescans the corpus.
+  * Scale shape: ONE token explode feeds ONE map-side-combinable (source,
+  * token) aggregate, and the sibling counts are windows over its rows: the
+  * corpus count c_tot partitioned by token, then n_s/n_types partitioned by
+  * source, which leaves the rows partitioned for the final per-source sum.
+  * The corpus total n_tot is one count of the token stream taken before
+  * the plan is built. The plan is one chain of exchanges: no window sees
+  * the raw token stream, nothing is joined back, and no two exchanges
+  * race (AQE numbers the codegen stages it creates after a race in the
+  * order the racing stages finish, so the generated source would change
+  * from run to run and miss Spark's codegen cache). The final aggregate is
+  * |sources| rows.
   */
 object SourceDivergence {
 
@@ -34,25 +42,21 @@ object SourceDivergence {
 
   /** (source, n_tokens, n_types, kl_str) per source, source order. */
   def sourceKl(docs0: DataFrame): DataFrame = {
-    val docs = graft.Tables.widen(docs0)
-    val toks = docs.select(
+    val toks = graft.Tables.widen(docs0).select(
       col("source"),
       explode(expr(s"regexp_extract_all(${TextOps.LowerTextSql}, '${TextOps.TokenRe}', 0)")).as("token"))
-    val bySrcTok = toks.groupBy(col("source"), col("token")).agg(count(lit(1)).as("c_s"))
-    val byTok    = bySrcTok.groupBy(col("token")).agg(sum(col("c_s")).as("c_tot"))
-    val bySrc    = bySrcTok.groupBy(col("source")).agg(
-      sum(col("c_s")).as("n_s"), count(lit(1)).as("n_types"))
-    val total    = byTok.agg(sum(col("c_tot")).as("n_tot"))
-    // NULL-safe source join: a NULL source is a group like any other (the
-    // textStats/groupBy convention) — a plain equi-join would silently drop
-    // the whole NULL-source feed from the report while its tokens still
-    // count inside n_tot/c_tot (r11 fuzz find)
-    bySrcTok
-      .join(byTok, Seq("token"))
-      .join(broadcast(bySrc.withColumnRenamed("source", "src2")),
-        col("source") <=> col("src2"))
-      .drop("src2")
-      .crossJoin(broadcast(total))
+    // n_tot, the corpus token count, is one count of the token stream taken
+    // before the scoring plan is built. A global total joined back onto the
+    // rows would read them twice, and two reads of the shared documents
+    // artifact share no exchange (org.apache.spark.sql.GraftPersist)
+    val nTot = toks.count()
+    val bySource = Window.partitionBy(col("source"))
+    toks
+      .groupBy(col("source"), col("token"))
+      .agg(count(lit(1)).as("c_s"))
+      .select(col("source"), col("c_s"), sum(col("c_s")).over(Window.partitionBy(col("token"))).as("c_tot"))
+      .select(col("source"), col("c_s"), col("c_tot"), lit(nTot).as("n_tot"),
+        sum(col("c_s")).over(bySource).as("n_s"), count(lit(1)).over(bySource).as("n_types"))
       .select(col("source"), col("n_s"), col("n_types"), expr(termExpr).as("term"))
       .groupBy(col("source"))
       .agg(

@@ -24,30 +24,25 @@ import org.apache.spark.sql.functions._
   * generator (transform over sequence — no shuffle); the ONLY corpus-sized
   * exchanges are the span groupBy (map-side combinable min/count) and the
   * join of span occurrences back to their keeper, both hash-partitioned on
-  * the span string. Covered positions explode k rows per removed span
-  * (bounded by k·|removals|), and the stitch is one groupBy(doc_id) whose
-  * per-group state is the surviving tokens of ONE document. Nothing is
-  * ever |docs|² and no window scans the raw token stream. At larger id
-  * spaces the encoded keeper key (doc_id·10⁶+pos) widens to a struct min /
-  * 128-bit key — the arithmetic here assumes pos < 10⁶ and doc_id < 9·10¹²,
-  * true by orders of magnitude for the declared tables.
+  * the span string. The cut span starts of each document are grouped once
+  * (bounded by |removals|) and left-joined onto its token-array row, where
+  * the kept positions are `array_except(sequence(0, n-1), cut)` — linear
+  * in the document's tokens plus cuts, never a tokens × cuts scan — and
+  * `text_kept` is rebuilt from the array in-row. No token-level explode, no
+  * anti-join and no regroup of surviving tokens; nothing is ever |docs|²
+  * and no window scans the raw token stream.
   *
-  * Determinism: the keeper is a pure min over an integer encoding; token
-  * order is restored by array_sort on (pos, token) — pos is unique within a
-  * doc, so the sort is a total order and the rebuilt string is a pure
-  * function of the corpus.
+  * Determinism: the keeper is a pure min over the (doc_id, pos) struct,
+  * exact for every bigint id; kept positions follow `sequence` order, so
+  * the rebuilt string is a pure function of the corpus.
   */
 object SpanDedup {
-
-  private val PosBase = 1000000L
 
   /** (doc_id, n_tokens, n_kept, text_kept) per document, doc_id order. */
   def spanDedup(docs0: DataFrame, k: Int = 8): DataFrame = {
     require(k >= 2, "span dedup needs k >= 2")
-    val docs = graft.Tables.widen(docs0)
-    val toks = docs.select(col("doc_id"), split(TextOps.lowerSimple(col("text")), " ").as("ts"))
-
-    val tok = toks.select(col("doc_id"), posexplode(col("ts")).as(Seq("pos", "token")))
+    val toks = graft.Tables.widen(docs0)
+      .select(col("doc_id"), split(TextOps.lowerSimple(col("text")), " ").as("ts"))
 
     // per-row span generator: start positions 0..len-k, k tokens re-joined
     val spans = toks
@@ -57,45 +52,39 @@ object SpanDedup {
         explode(expr(
           s"transform(sequence(0, size(ts) - $k), i -> struct(i AS pos, array_join(slice(ts, i + 1, $k), ' ') AS s))"
         )).as("x"))
-      .select(col("doc_id"), col("x.pos").cast("long").as("pos"), col("x.s").as("s"))
+      .select(col("doc_id"), col("x.pos").as("pos"), col("x.s").as("s"))
 
     // global first occurrence per span string — map-side-combinable min
     val keeper = spans
       .groupBy(col("s"))
-      .agg(min(col("doc_id") * PosBase + col("pos")).as("keep_key"), count(lit(1)).as("occ"))
+      .agg(min(struct(col("doc_id"), col("pos"))).as("keep"), count(lit(1)).as("occ"))
 
-    // non-first occurrences of duplicated spans cut their k positions
-    val covered = spans
+    // non-first occurrences of duplicated spans: each document's cut starts
+    val cuts = spans
       .join(keeper.where(col("occ") > 1), Seq("s"))
-      .where(col("doc_id") * PosBase + col("pos") =!= col("keep_key"))
-      .select(col("doc_id"), explode(expr(s"sequence(pos, pos + ${k - 1})")).as("pos"))
-      .distinct()
-
-    val kept = tok
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("token"))
-      .join(covered, Seq("doc_id", "pos"), "left_anti")
-
-    val rebuilt = kept
+      .where(struct(col("doc_id"), col("pos")) =!= col("keep"))
       .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_kept"),
-        expr("array_join(transform(array_sort(collect_list(struct(pos, token))), x -> x.token), ' ')")
-          .as("text_kept"))
+      .agg(collect_list(col("pos")).as("starts"))
 
+    // kept positions in token order; NULL for a NULL text (no tokens)
+    val kept = expr(
+      "CASE WHEN ts IS NULL THEN NULL WHEN starts IS NULL THEN sequence(0, size(ts) - 1) " +
+        "ELSE array_except(sequence(0, size(ts) - 1), " +
+        s"flatten(transform(starts, p -> sequence(p, p + ${k - 1})))) END")
     toks
-      .select(col("doc_id"), size(col("ts")).cast("long").as("n_tokens"))
-      .join(rebuilt, Seq("doc_id"), "left")
+      .join(cuts, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("ts"), kept.as("kept"))
       .select(
         col("doc_id"),
-        col("n_tokens"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("text_kept"), lit("")).as("text_kept"))
+        size(col("ts")).cast("long").as("n_tokens"),
+        expr("IF(kept IS NULL, 0L, CAST(size(kept) AS BIGINT))").as("n_kept"),
+        expr("IF(kept IS NULL, '', array_join(transform(kept, i -> ts[i]), ' '))").as("text_kept"))
       .orderBy("doc_id")
   }
 
-  /** DuckDB twin of [[spanDedup]]: the identical keeper encoding
-    * (doc_id·10⁶+pos), the identical covered-position union, string_agg
-    * ordered by pos for the stitch.
+  /** DuckDB twin of [[spanDedup]]: the identical (doc_id, pos) struct
+    * keeper, the identical covered-position union, string_agg ordered by
+    * pos for the stitch.
     */
   def oracleSpanDedup(k: Int = 8): String =
     s"""WITH toks AS (
@@ -112,12 +101,12 @@ object SpanDedup {
        |        i -> {'pos': i, 's': array_to_string(list_slice(ts, i + 1, i + $k), ' ')})) AS x
        |    FROM toks WHERE len(ts) >= $k)),
        |keep AS (
-       |  SELECT s, min(doc_id * ${PosBase} + pos) AS keep_key, count(*) AS occ
+       |  SELECT s, min({'doc_id': doc_id, 'pos': pos}) AS keep, count(*) AS occ
        |  FROM sp GROUP BY s),
        |cov AS (
        |  SELECT DISTINCT sp.doc_id, unnest(range(sp.pos, sp.pos + $k)) AS cpos
        |  FROM sp JOIN keep ON sp.s = keep.s
-       |  WHERE keep.occ > 1 AND sp.doc_id * ${PosBase} + sp.pos <> keep.keep_key),
+       |  WHERE keep.occ > 1 AND {'doc_id': sp.doc_id, 'pos': sp.pos} <> keep.keep),
        |kept AS (
        |  SELECT t.doc_id, t.pos, t.token FROM tok t
        |  LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.pos = c.cpos

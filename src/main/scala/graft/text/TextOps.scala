@@ -321,44 +321,53 @@ object TextOps {
     * Cross-engine exactness: identical to [[unigramScores]] — per-token
     * log-ratios pass through DECIMAL(18,6), per-doc sums are exact, the two
     * log10 calls carry the same ≤1-ulp-then-round risk already accepted
-    * there. Plan: one explode feeds both count relations (map-side
-    * combinable), the ≤|vocab| ratio table broadcasts back onto the token
-    * stream, per-doc decimal sum, left join for token-less docs.
+    * there.
+    *
+    * Scale shape: one `explode_outer` of the token arrays is the scoring
+    * stream — a token-less document contributes one null-token row, so
+    * every document stays in it and no join recovers the missing ones. The
+    * per-token counts are one map-side-combinable aggregate; the corpus
+    * totals ns/nt/v are partition-less windows over its ≤|vocab| aggregated
+    * rows (never over the raw stream), so no 1-row total is aggregated and
+    * cross-joined separately. The ratio table broadcasts back onto the
+    * stream (left join), and one groupBy(doc_id) with count(token) yields
+    * every document's row (doc_id is the table's key).
     */
   /** The (doc_id, n_tokens, logweight_r) relation [[dsirWeights]] and
     * [[dsirTop]] share — every doc present, token-less docs at weight 0.
     */
   private def dsirPerDoc(docs: DataFrame, targetLang: String, alpha: Double): DataFrame = {
-    val base = graft.Tables.widen(docs)
-    val toks = base.select(
+    val toks = graft.Tables.widen(docs).select(
       col("doc_id"),
       col("lang"),
-      explode(expr(s"regexp_extract_all($LowerTextSql, '$TokenRe', 0)")).as("token")
+      explode_outer(expr(s"regexp_extract_all($LowerTextSql, '$TokenRe', 0)")).as("token")
     )
-    val counts = toks
+    // bounded-global-window: the corpus totals run over the ALREADY-
+    // AGGREGATED per-token rows (|vocab|, sublinear in corpus size), never
+    // over the token stream; one window pass replaces the 1-row totals
+    // aggregate and its cross join
+    val all = org.apache.spark.sql.expressions.Window.partitionBy()
+    val a   = lit(alpha)
+    val lr = log10((col("ct") + a) / (col("nt") + a * col("v"))) -
+      log10((col("cs") + a) / (col("ns") + a * col("v")))
+    val ratios = toks
+      .where(col("token").isNotNull)
       .groupBy(col("token"))
       .agg(
         count(lit(1)).as("cs"),
         sum(when(col("lang") === targetLang, 1L).otherwise(0L)).as("ct")
       )
-    val totals = counts.agg(
-      sum(col("cs")).as("ns"),
-      sum(col("ct")).as("nt"),
-      count(lit(1)).as("v")
-    )
-    val a  = lit(alpha)
-    val lr = log10((col("ct") + a) / (col("nt") + a * col("v"))) -
-      log10((col("cs") + a) / (col("ns") + a * col("v")))
-    val perDoc = toks
-      .join(broadcast(counts.crossJoin(totals).select(col("token"), lr.cast("decimal(18,6)").as("lr"))), Seq("token"))
+      .select(col("token"), col("cs"), col("ct"),
+        sum(col("cs")).over(all).as("ns"), sum(col("ct")).over(all).as("nt"),
+        count(lit(1)).over(all).as("v"))
+      .select(col("token"), lr.cast("decimal(18,6)").as("lr"))
+    toks
+      .join(broadcast(ratios), Seq("token"), "left")
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"), sum(col("lr")).as("sum_lr"))
-    base
-      .select(col("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left")
+      .agg(count(col("token")).as("n_tokens"), sum(col("lr")).as("sum_lr"))
       .select(
         col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
+        col("n_tokens"),
         round(coalesce(col("sum_lr").cast("double"), lit(0.0)), 6).as("logweight_r")
       )
   }

@@ -29,7 +29,7 @@ class ExchangeBudgetSpec extends AnyFunSuite {
     "asof_orders_events" -> (2, 0),
     "benford_lineitem" -> (6, 1),
     "best_survivors_documents" -> (3, 2),
-    "bigram_scores_documents" -> (9, 3),
+    "bigram_scores_documents" -> (3, 1),
     "blocklist_documents" -> (2, 0),
     "bm25_documents" -> (8, 2),
     "boilerplate_documents" -> (2, 0),
@@ -51,7 +51,7 @@ class ExchangeBudgetSpec extends AnyFunSuite {
     "csv_roundtrip_documents" -> (1, 0),
     "cube_documents" -> (3, 0),
     "cumulative_users_events" -> (3, 0),
-    "curated_documents" -> (3, 3),
+    "curated_documents" -> (1, 3),
     "datasheet_documents" -> (14, 0),
     "deciles_customer" -> (3, 0),
     "decontaminated_documents" -> (6, 7),
@@ -60,8 +60,8 @@ class ExchangeBudgetSpec extends AnyFunSuite {
     "diff_documents" -> (3, 0),
     "dim_stats_embeddings" -> (4, 0),
     "drift_documents" -> (0, 0),
-    "dsir_top_documents" -> (9, 2),
-    "dsir_weights_documents" -> (10, 2),
+    "dsir_top_documents" -> (2, 1),
+    "dsir_weights_documents" -> (3, 1),
     "dupgrams_documents" -> (4, 0),
     "dv_ddl_customer" -> (1, 0),
     "dv_hub_customer" -> (2, 0),
@@ -160,8 +160,8 @@ class ExchangeBudgetSpec extends AnyFunSuite {
     "sketch_quantiles_lineitem" -> (1, 0),
     "skew_events" -> (3, 1),
     "skyline_part" -> (5, 1),
-    "source_kl_documents" -> (14, 3),
-    "spandedup_documents" -> (8, 3),
+    "source_kl_documents" -> (4, 0),
+    "spandedup_documents" -> (2, 2),
     "splits_documents" -> (3, 0),
     "stats_customer" -> (1, 0),
     "stats_lineitem" -> (1, 0),

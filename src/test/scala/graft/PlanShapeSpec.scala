@@ -152,6 +152,32 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(windowLine.isDefined && m.indexOf("Window") < m.indexOf("HashAggregate"),
       s"mixture window should sit above the aggregate:\n$m")
     assert("FileScan".r.findAllMatchIn(m).size == 1, s"mixture must stay one scan:\n$m")
+
+    // the corpus-count windows of the re-planned text scorers (bigram's
+    // c(w1·), dsir's totals, source_kl's c_tot and n_s/n_types) each sit
+    // above an aggregate: they partition ≤|vocab|·|sources| aggregated
+    // rows, never the raw token stream
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    def input(p: SparkPlan): SparkPlan = p match {
+      case x: ProjectExec => input(x.child)
+      case x: FilterExec  => input(x.child)
+      case x: WindowExec  => input(x.child)
+      case other          => other
+    }
+    val scorers = Map(
+      "bigram"    -> graft.text.BigramLm.bigramScores(docs),
+      "dsir"      -> graft.text.TextOps.dsirWeights(docs),
+      "source_kl" -> graft.text.SourceDivergence.sourceKl(docs)
+    )
+    for ((name, df) <- scorers) {
+      val windows = df.queryExecution.sparkPlan.collect { case w: WindowExec => w }
+      assert(windows.nonEmpty, s"$name plans no window:\n${df.queryExecution.sparkPlan}")
+      for (w <- windows)
+        assert(input(w.child).isInstanceOf[HashAggregateExec],
+          s"$name window does not sit above an aggregate:\n${df.queryExecution.sparkPlan}")
+    }
   }
 
   test("sampling filters sit on the scan — no shuffle at all") {

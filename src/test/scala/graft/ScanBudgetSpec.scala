@@ -27,8 +27,8 @@ class ScanBudgetSpec extends AnyFunSuite {
     "anomalies_events" -> (1, 2),
     "asof_orders_events" -> (2, 7),
     "benford_lineitem" -> (2, 2),
-    "best_survivors_documents" -> (2, 3),
-    "bigram_scores_documents" -> (4, 5),
+    "best_survivors_documents" -> (1, 2),
+    "bigram_scores_documents" -> (0, 0),
     "blocklist_documents" -> (1, 2),
     "bm25_documents" -> (3, 5),
     "boilerplate_documents" -> (1, 1),
@@ -36,7 +36,7 @@ class ScanBudgetSpec extends AnyFunSuite {
     "cdc_snapshot_orders" -> (1, 5),
     "checks_orders" -> (2, 15),
     "chunks_documents" -> (1, 2),
-    "cluster_sizes_documents" -> (1, 1),
+    "cluster_sizes_documents" -> (0, 0),
     "cohorts_events" -> (1, 2),
     "composite_keys_lineitem" -> (8, 11),
     "consistency_orders" -> (2, 6),
@@ -46,21 +46,21 @@ class ScanBudgetSpec extends AnyFunSuite {
     "copurchase_lineitem" -> (1, 2),
     "corr_lineitem" -> (1, 4),
     "cosine_dups_embeddings" -> (2, 4),
-    "cross_source_dups_documents" -> (4, 6),
+    "cross_source_dups_documents" -> (2, 4),
     "csv_roundtrip_documents" -> (1, 5),
     "cube_documents" -> (1, 3),
     "cumulative_users_events" -> (1, 2),
-    "curated_documents" -> (3, 6),
+    "curated_documents" -> (0, 0),
     "datasheet_documents" -> (5, 8),
     "deciles_customer" -> (1, 1),
-    "decontaminated_documents" -> (6, 9),
-    "dedup_clusters_documents" -> (1, 1),
+    "decontaminated_documents" -> (5, 8),
+    "dedup_clusters_documents" -> (0, 0),
     "dedup_exact_documents" -> (1, 2),
     "diff_documents" -> (3, 15),
     "dim_stats_embeddings" -> (1, 1),
     "drift_documents" -> (0, 0),
-    "dsir_top_documents" -> (4, 7),
-    "dsir_weights_documents" -> (4, 7),
+    "dsir_top_documents" -> (0, 0),
+    "dsir_weights_documents" -> (0, 0),
     "dupgrams_documents" -> (1, 2),
     "dv_ddl_customer" -> (0, 0),
     "dv_hub_customer" -> (1, 1),
@@ -159,8 +159,8 @@ class ScanBudgetSpec extends AnyFunSuite {
     "sketch_quantiles_lineitem" -> (0, 0),
     "skew_events" -> (2, 2),
     "skyline_part" -> (2, 5),
-    "source_kl_documents" -> (4, 8),
-    "spandedup_documents" -> (4, 8),
+    "source_kl_documents" -> (0, 0),
+    "spandedup_documents" -> (0, 0),
     "splits_documents" -> (1, 3),
     "stats_customer" -> (0, 0),
     "stats_lineitem" -> (0, 0),

@@ -128,6 +128,16 @@ class SurfacePlanHygieneSpec extends AnyFunSuite {
       ("share denominator over the ALREADY-AGGREGATED |lang × source| " +
         "strata rows (hundreds at most); the doc scan is aggregated before " +
         "the window (TextOps.mixture, bounded-global-window comment)"),
+    // the re-planned DSIR scorer derives its corpus totals from the
+    // aggregate it already holds instead of a 1-row total cross-joined back
+    // (TextOps.dsirPerDoc, bounded-global-window comment):
+    "dsir_top_documents" ->
+      ("inherits dsir_weights' ns/nt/v window over the per-token aggregate " +
+        "(TextOps.dsirPerDoc)"),
+    "dsir_weights_documents" ->
+      ("ns/nt/v totals over the ALREADY-AGGREGATED per-token counts: " +
+        "|vocab| rows, which grow sublinearly in the corpus (Heaps' law); " +
+        "the token stream is aggregated before the window"),
     "revenue_share_nation" ->
       ("corpus-total denominator over the ALREADY-AGGREGATED per-nation " +
         "revenue rows (≤25 — nation is a fixed dimension); the fact joins " +
