@@ -32,7 +32,7 @@ object OracleGen {
   private def qstr(s: String): String   = "'" + s.replace("'", "''") + "'"
 
   /** Stats CTE for one column: total/non-null/distinct plus one match count
-    * per measured pattern. Mirror of `graft.stats.StatsPass.aggsFor`.
+    * per measured pattern. Mirror of `graft.stats.StatsPass.patternAggsFor`.
     */
   private def statsSelect(table: String, colName: String, isMap: Boolean): String = {
     val c = qid(colName)

@@ -3,7 +3,7 @@ package graft.serve
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPersist, SparkSession}
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -145,11 +145,17 @@ object ProfileServer {
   /** Parse an uploaded file into (good rows, quarantined count, release).
     * JSONL reads PERMISSIVE with an explicit `_corrupt_record` column
     * appended to the inferred schema — malformed lines count as quarantined
-    * instead of failing the upload. The parsed frame is CACHED (Spark
+    * instead of failing the upload. The parsed rows are PERSISTED (Spark
     * disallows filtering a raw file source on `_corrupt_record` alone —
-    * QUERY_ONLY_CORRUPT_RECORD_COLUMN); callers run `release()` after
-    * profiling. CSV reads header+inference (the size cap bounds the
-    * inference scan). None when nothing parseable remains.
+    * QUERY_ONLY_CORRUPT_RECORD_COLUMN — and every column batch of the
+    * profile must see one parse) through `GraftPersist`, not the session
+    * cache, whose first read AQE materializes in a job of its own. One
+    * aggregate over them in one partition counts good and quarantined rows
+    * and fills the persisted blocks in the same job; callers run
+    * `release()` after profiling. None when no line parses. CSV reads
+    * header+inference (the size cap bounds the inference scan) with no row
+    * probe: the caller answers a 0-row profile as "no parseable rows". None
+    * when the file has no columns.
     */
   private[serve] def parseUpload(
       spark: SparkSession,
@@ -165,17 +171,18 @@ object ProfileServer {
           inferred.schema.fields.filterNot(_.name == "_corrupt_record") :+
             org.apache.spark.sql.types.StructField(
               "_corrupt_record", org.apache.spark.sql.types.StringType))
-        val withQ = graft.io.Sources.readJsonl(spark, path, Some(q)).cache()
-        val release = () => { withQ.unpersist(false); () }
-        import org.apache.spark.sql.functions.col
-        val quarantined = withQ.where(col("_corrupt_record").isNotNull).count()
-        val good = withQ.where(col("_corrupt_record").isNull).drop("_corrupt_record")
-        if (good.isEmpty) { release(); None }
-        else Some((good, quarantined, release))
+        val withQ = GraftPersist(graft.io.Sources.readJsonl(spark, path, Some(q)))
+        val release = () => GraftPersist.unpersist(withQ)
+        import org.apache.spark.sql.functions.{col, count_if}
+        val bad = col("_corrupt_record").isNotNull
+        // one job: a global aggregate over one partition needs no exchange
+        val counts = withQ.coalesce(1).agg(count_if(!bad), count_if(bad)).collect()(0)
+        if (counts.getLong(0) == 0L) { release(); None }
+        else Some((withQ.where(!bad).drop("_corrupt_record"), counts.getLong(1), release))
       }
     case "csv" =>
       val df = graft.io.Sources.readCsv(spark, path)
-      if (df.columns.isEmpty || df.isEmpty) None else Some((df, 0L, () => ()))
+      if (df.columns.isEmpty) None else Some((df, 0L, () => ()))
     case _ => None
   }
 
@@ -287,12 +294,16 @@ object ProfileServer {
                       val profiles =
                         try engine(df)
                         finally release()
-                      val o = mapper.createObjectNode()
-                      o.put("rows", profiles.headOption.map(_.totalRows).getOrElse(0L))
-                      o.put("quarantined", quarantined)
-                      o.set[com.fasterxml.jackson.databind.JsonNode](
-                        "profiles", mapper.readTree(profilesToJson(profiles)))
-                      (200, mapper.writeValueAsString(o))
+                      val rows = profiles.headOption.map(_.totalRows).getOrElse(0L)
+                      if (rows == 0L) (400, err("no parseable rows in upload"))
+                      else {
+                        val o = mapper.createObjectNode()
+                        o.put("rows", rows)
+                        o.put("quarantined", quarantined)
+                        o.set[com.fasterxml.jackson.databind.JsonNode](
+                          "profiles", mapper.readTree(profilesToJson(profiles)))
+                        (200, mapper.writeValueAsString(o))
+                      }
                   }
                 } finally
                   // profiling is complete (engine() is eager), and the file

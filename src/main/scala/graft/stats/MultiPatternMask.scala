@@ -7,10 +7,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Precompiled regex bank evaluated against one value in a single call,
   * returning a bitmask (bit i = pattern i matched, `find()` semantics like
-  * `rlike`). Matchers are compiled once per JVM-deserialized instance and
-  * reused through a ThreadLocal (java.util.regex.Matcher is stateful and not
-  * thread-safe; reuse avoids the per-row Matcher allocation that `rlike`
-  * pays once per pattern per row).
+  * `rlike`). Patterns are compiled once per JVM-deserialized instance. A
+  * java.util.regex.Matcher is stateful and not thread-safe, so each caller
+  * reuses its own [[matchers]]: generated code holds one array per partition,
+  * interpreted evaluation one per thread. Reuse avoids the per-row Matcher
+  * allocation that `rlike` pays once per pattern per row.
   */
 final class PatternBankMatcher(val regexes: Array[String]) extends Serializable {
   import java.util.regex.{Matcher, Pattern}
@@ -21,12 +22,17 @@ final class PatternBankMatcher(val regexes: Array[String]) extends Serializable 
 
   @transient private lazy val compiled: Array[Pattern] = regexes.map(Pattern.compile)
 
-  @transient private lazy val local: ThreadLocal[Array[Matcher]] =
-    ThreadLocal.withInitial(() => compiled.map(_.matcher("")))
+  /** One fresh matcher per pattern, for a single thread's use. */
+  def matchers(): Array[Matcher] = compiled.map(_.matcher(""))
 
-  def mask(s: UTF8String): Long = {
+  // interpreted evaluation only: a ThreadLocal lookup per value
+  @transient private lazy val local: ThreadLocal[Array[Matcher]] =
+    ThreadLocal.withInitial(() => matchers())
+
+  def mask(s: UTF8String): Long = mask(s, local.get())
+
+  def mask(s: UTF8String, ms: Array[Matcher]): Long = {
     val str = s.toString
-    val ms  = local.get()
     var m   = 0L
     var i   = 0
     while (i < ms.length) {
@@ -59,7 +65,10 @@ case class MultiPatternMask(child: Expression, regexes: Seq[String]) extends Una
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val bankRef = ctx.addReferenceObj("patternBank", bank, classOf[PatternBankMatcher].getName)
-    defineCodeGen(ctx, ev, c => s"$bankRef.mask($c)")
+    // per-partition matchers, as Spark's RLike holds its Pattern
+    val matchers = ctx.addMutableState("java.util.regex.Matcher[]", "patternBankMatchers",
+      v => s"$v = $bankRef.matchers();")
+    defineCodeGen(ctx, ev, c => s"$bankRef.mask($c, $matchers)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MultiPatternMask =

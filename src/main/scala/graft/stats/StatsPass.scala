@@ -59,14 +59,18 @@ import scala.util.Try
   * sum. Each job carries its caller's job group, description and tags (see
   * [[callerFuture]]).
   *
-  * Small-input parallelism: a table that arrives as fewer scan partitions
-  * than the cluster has cores (e.g. one parquet row group — row-group
-  * granularity caps split-based parallelism no matter what
-  * `maxPartitionBytes` says) would run the whole pass in one task.
-  * [[Config.autoRepartition]] round-robins such inputs to
-  * `defaultParallelism` partitions first, unless the scan is at most
-  * [[Config.tinyScanBytes]]. Inputs that already have enough partitions (any
-  * real at-scale table) are left untouched — no shuffle.
+  * Small inputs ([[Config.autoRepartition]]):
+  *  - A scan of at most [[Config.tinyScanBytes]] runs in one partition
+  *    (`coalesce(1)`, no shuffle). Its `SinglePartition` output satisfies
+  *    both `groupBy`s, so the planner inserts no exchange and each batch is
+  *    one stage and one job. Such a table fits one task anyway.
+  *  - A larger table that arrives as fewer scan partitions than the cluster
+  *    has cores (e.g. one parquet row group — row-group granularity caps
+  *    split-based parallelism no matter what `maxPartitionBytes` says)
+  *    would run the whole pass in one task, so it is round-robined to
+  *    `defaultParallelism` partitions first.
+  *  - Inputs that already have enough partitions (any real at-scale table)
+  *    are left as they are.
   */
 object StatsPass {
 
@@ -85,7 +89,7 @@ object StatsPass {
       sampleK: Int = 5,
       /** rows scanned (from the head of the table) for the sample capture */
       sampleScanRows: Int = 1000,
-      /** repartition inputs narrower than defaultParallelism (see scaladoc) */
+      /** coalesce tiny inputs, widen other narrow ones (see scaladoc) */
       autoRepartition: Boolean = true,
       /** columns per grouped pass (bounds the expand multiplier) */
       maxDistinctPerJob: Int = 8,
@@ -95,8 +99,8 @@ object StatsPass {
         */
       nativePatternBank: Boolean = true,
       /** scans at or below this many bytes (catalog/file-size estimate,
-        * compressed) skip the widening repartition — the extra exchange buys
-        * nothing when the whole table fits in one task's stride.
+        * compressed) run in one partition with no exchange instead of being
+        * widened — the whole table fits in one task's stride.
         */
       tinyScanBytes: Long = 2L << 20,
       /** upper bound on any one concurrent measurement job (a production
@@ -265,13 +269,16 @@ object StatsPass {
   private def await[T](f: Future[T], config: Config): T =
     Await.result(f, Duration(config.awaitTimeoutSec, SECONDS))
 
-  /** Round-robin narrow inputs out to cluster width unless the scan is tiny
+  /** A tiny scan goes to one partition, so the grouped pass plans no
+    * exchange; other narrow inputs are round-robined out to cluster width
     * (see object scaladoc; delegates to the memoized [[graft.Tables.widen]]).
     * An unknown scan size counts as not tiny.
     */
   private def maybeRepartition(df: DataFrame, config: Config): DataFrame = {
     val tiny = Try(df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption.exists(_ <= config.tinyScanBytes)
-    if (!config.autoRepartition || tiny) df else graft.Tables.widen(df)
+    if (!config.autoRepartition) df
+    else if (tiny) df.coalesce(1)
+    else graft.Tables.widen(df)
   }
 
   private def rawCol(f: StructField): Column = col(s"`${f.name.replace("`", "``")}`")

@@ -58,6 +58,8 @@ class MainSourceLintSpec extends AnyFunSuite {
       (1, "single merged-partials row"),
     "stats/StatsPass.scala" ->
       (3, "grouped pass: ≤ maxDistinctPerJob rows, one per column; 1-row approx-distinct aggregate; 1-row sample capture"),
+    "serve/ProfileServer.scala" ->
+      (1, "JSONL upload: 1-row good/quarantined count_if aggregate"),
     "vault/DataVault.scala" ->
       (1, "fkCandidates: ONE |suffix-classes|-row collect of per-class 1-row pivot aggregates (orphan counts + uniqueness, r19)"),
     "similarity/KMeans.scala" ->

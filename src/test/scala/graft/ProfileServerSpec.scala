@@ -123,6 +123,7 @@ class ProfileServerSpec extends AnyFunSuite {
     assert(call("/upload?format=xml", "POST", Some("x"))._1 == 400)
     assert(call("/upload?format=jsonl", "POST", Some("NOT JSON AT ALL"))._1 == 400)
     assert(call("/upload?format=csv", "POST", Some(""))._1 == 400)
+    assert(call("/upload?format=csv", "POST", Some("a,b\n")) == ((400, """{"error":"no parseable rows in upload"}""")))
     assert(call("/upload?format=csv")._1 == 405)
   }
 
@@ -168,13 +169,25 @@ class ProfileServerSpec extends AnyFunSuite {
   }
 
   test("each request runs its Spark jobs under its own serve:<endpoint>:<seq> job group") {
-    val groups = SparkTestBase.jobGroupsOf {
+    val groups = SparkTestBase.jobsOf {
       assert(call(s"/profile?path=${SurfacePlans.dir}/region.parquet")._1 == 200)
       assert(call("/upload?format=csv", "POST", Some(csv))._1 == 200)
-    }
+    }.groups
     assert(groups.forall(_.matches("serve:(profile|upload):\\d+")), groups.distinct.mkString(", "))
     assert(groups.distinct.count(_.startsWith("serve:profile:")) == 1)
     assert(groups.distinct.count(_.startsWith("serve:upload:")) == 1)
+  }
+
+  test("a tiny /profile runs at most 2 Spark jobs, and an upload of either format at most 3") {
+    val requests = Seq(
+      ("profile", 2, s"/profile?path=${SurfacePlans.dir}/region.parquet", "GET", Option.empty[String]),
+      ("upload", 3, "/upload?format=csv", "POST", Some(csv)),
+      ("upload", 3, "/upload?format=jsonl", "POST", Some(jsonl)))
+    for ((endpoint, budget, path, method, body) <- requests) {
+      val groups = SparkTestBase.jobsOf(assert(call(path, method, body)._1 == 200)).groups
+      assert(groups.nonEmpty && groups.forall(_.startsWith(s"serve:$endpoint:")), groups.distinct.mkString(", "))
+      assert(groups.size <= budget, s"$path ran ${groups.size} jobs")
+    }
   }
 
   test("concurrent /profile and /upload replies equal the same requests sent alone") {

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
 /** One shared local SparkSession for the whole test JVM. */
 object SparkTestBase {
@@ -34,23 +35,30 @@ object SparkTestBase {
     s
   }
 
-  /** The job group (`""` when none) of every Spark job that starts while
-    * `body` runs, in start order. Suites run one at a time, so no other job
-    * starts in between.
+  /** The Spark jobs that start while some code runs: each job's group (`""`
+    * when none) in start order, and the shuffle bytes their tasks wrote.
     */
-  def jobGroupsOf(body: => Unit): Seq[String] = {
+  final case class Jobs(groups: Seq[String], shuffleWriteBytes: Long)
+
+  /** The [[Jobs]] that `body` runs. Suites run one at a time, so no other
+    * job starts in between.
+    */
+  def jobsOf(body: => Unit): Jobs = {
     val sc = spark.sparkContext
     val marker = s"marker-${java.util.UUID.randomUUID()}"
     val started = new LinkedBlockingQueue[String]()
+    val written = new AtomicLong()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => written.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
     sc.addSparkListener(listener)
     try {
       body
       // the listener bus delivers events in order: once the marker job's
-      // start arrives, so has the start of every job `body` ran
+      // start arrives, so has every job start and task end of `body`
       val t = new Thread(() => {
         sc.setJobGroup(marker, marker)
         sc.parallelize(Seq(1), 1).count()
@@ -64,7 +72,7 @@ object SparkTestBase {
         g = started.poll(60, TimeUnit.SECONDS)
       }
       require(g == marker, "listener bus did not deliver the marker job within 60 s")
-      seen.result()
+      Jobs(seen.result(), written.get)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -58,10 +58,40 @@ class StatsPassSpec extends AnyFunSuite {
     assert(StatsPass.computeBasic(df) == ref.map(_.copy(patternMatches = Map.empty)), what)
   }
 
-  test("grouped pass equals the per-row reference on every sf0.001 table") {
+  /** The two exact passes at the default config, by name. */
+  private val passes = Seq[(String, DataFrame => Seq[ColumnStats])](
+    "compute" -> (df => StatsPass.compute(df)),
+    "computeBasic" -> (df => StatsPass.computeBasic(df))
+  )
+
+  private lazy val sf0001Tables: Seq[String] = {
     val tables = new java.io.File(dir).list().toSeq.filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
     assert(tables.size >= 10)
-    for (t <- tables.sorted) assertMatchesReference(Tables.load(spark, dir, t), t)
+    tables.sorted
+  }
+
+  test("grouped pass equals the per-row reference on every sf0.001 table") {
+    for (t <- sf0001Tables) assertMatchesReference(Tables.load(spark, dir, t), t)
+  }
+
+  test("the widened path equals the single-partition path on every sf0.001 table") {
+    // every test table is tiny; tinyScanBytes = -1 sends each one through Tables.widen
+    val widened = StatsPass.Config(tinyScanBytes = -1)
+    for (t <- sf0001Tables) {
+      val df = Tables.load(spark, dir, t)
+      assert(StatsPass.compute(df, widened) == StatsPass.compute(df), t)
+      assert(StatsPass.computeBasic(df, widened) == StatsPass.computeBasic(df), t)
+    }
+  }
+
+  test("a tiny input runs one job per batch of 8 columns and shuffles nothing") {
+    val lineitem = Tables.load(spark, dir, "lineitem")
+    assert((lineitem.columns.length + 7) / 8 == 2) // two batches
+    for ((name, pass) <- passes) {
+      val jobs = SparkTestBase.jobsOf(pass(lineitem))
+      assert(jobs.groups.size == 2, s"$name ran ${jobs.groups.size} jobs")
+      assert(jobs.shuffleWriteBytes == 0L, s"$name wrote ${jobs.shuffleWriteBytes} shuffle bytes")
+    }
   }
 
   test("grouped pass equals the per-row reference on signed zeros, NaN, decimals, dates, maps and vectors") {
@@ -108,10 +138,6 @@ class StatsPassSpec extends AnyFunSuite {
 
   test("a repeat profile of a fresh load of the same table compiles no new code") {
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val passes = Seq[(String, DataFrame => Seq[ColumnStats])](
-      "compute" -> (df => StatsPass.compute(df)),
-      "computeBasic" -> (df => StatsPass.computeBasic(df))
-    )
     for ((name, pass) <- passes) {
       pass(Tables.load(spark, dir, "lineitem"))
       val before = compiles
@@ -202,7 +228,7 @@ class StatsPassSpec extends AnyFunSuite {
     for (g <- Seq("g1", "g2", "g3")) {
       val group = s"statspass-$g"
       @volatile var failure: Option[Throwable] = None
-      val groups = SparkTestBase.jobGroupsOf {
+      val groups = SparkTestBase.jobsOf {
         // a fresh thread per call: the global pool's workers were created by
         // some other thread, under some other (or no) job group
         val t = new Thread(() =>
@@ -213,7 +239,7 @@ class StatsPassSpec extends AnyFunSuite {
           } catch { case e: Throwable => failure = Some(e) })
         t.start()
         t.join()
-      }
+      }.groups
       failure.foreach(throw _)
       assert(groups.nonEmpty)
       assert(groups.forall(_ == group), s"$group's jobs booked to ${groups.distinct.mkString(", ")}")
