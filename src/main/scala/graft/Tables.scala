@@ -176,22 +176,28 @@ object Tables {
   }
 
   /** Load a testdata table. `events.ts` is normalized to TimestampType
-    * whatever the on-disk encoding (see [[normalizeEventTs]]).
+    * whatever the on-disk encoding (see [[normalizeEventTs]]). The read goes
+    * through [[graft.io.Sources.readParquet]], so a repeat load of unchanged
+    * files reuses the schema inferred by the first one (cached under the
+    * path and the session's SQL conf, stamped with [[inputVersion]]) and
+    * plans with no Spark job; a rewritten table is inferred afresh.
     */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$table.parquet")
+    val df = graft.io.Sources.readParquet(spark, s"$sfDir/$table.parquet")
     if (table == "events") normalizeEventTs(df) else df
   }
 
-  /** The version of a table's input: every file under its path with its
+  /** The version of the input under `path`: every file under it with its
     * size and modification time, in path order. Two reads of unchanged
-    * files give the same string; rewriting the table changes it. Caches of
-    * artifacts built from a table carry it in their key, so a long-lived
-    * session never serves a result of rows that are gone.
+    * files give the same string; rewriting the input changes it. Caches of
+    * artifacts built from an input carry it in their key (the `documents`
+    * artifact, the parquet schema cache), so a long-lived session never
+    * serves a result of rows or columns that are gone. Throws when the path
+    * cannot be listed (missing, or on a file system Hadoop cannot open).
     */
-  def inputVersion(spark: SparkSession, sfDir: String, table: String): String = {
-    val path  = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
-    val files = path.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(path, true)
+  def inputVersion(spark: SparkSession, path: String): String = {
+    val p     = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
     val b     = Seq.newBuilder[String]
     while (files.hasNext) {
       val f = files.next()
@@ -205,6 +211,10 @@ object Tables {
     * query, and fail with a loud per-column message on drift. The r8 round
     * lost its whole gate to a driver-side testdata regen that only a spec
     * caught — this makes the same check the first thing either main does.
+    *
+    * It reads the live footers with `spark.read.parquet`, never through the
+    * schema cache of [[load]]: a guard against drift must not see a cached
+    * schema.
     *
     * Returns the list of human-readable drift messages (empty = clean);
     * callers decide whether to abort.

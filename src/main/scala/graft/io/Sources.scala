@@ -15,8 +15,40 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** Parquet reader with the inferred schema cached. Inferring a parquet
+    * schema runs a Spark job (a footer read on an executor); a read with a
+    * declared schema plans with none. The schema is a function of the files
+    * and of the session's SQL conf (NTZ, nanos and binary-as-string
+    * inference read it), so it is cached under (path, SQL conf) and stamped
+    * with the path's [[graft.Tables.inputVersion]]: a read whose file
+    * listing matches the stamp is `spark.read.schema(cached).parquet(path)`,
+    * and one whose listing differs infers again and replaces the entry.
+    * A path that cannot be listed (missing, a glob, which Spark expands but
+    * Hadoop lists literally, or a file system without a listing) is read
+    * uncached, exactly `spark.read.parquet(path)`, so a missing path still
+    * fails with Spark's `AnalysisException`. Bounded by cap-and-clear like
+    * [[graft.Tables.widen]]'s memo; `SparkEntry.clearCaches` drops it.
+    */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    scala.util.Try(graft.Tables.inputVersion(spark, path)).toOption match {
+      case None => spark.read.parquet(path)
+      case Some(version) =>
+        val key = (path, spark.conf.getAll)
+        schemaCache.get(key) match {
+          case Some((`version`, schema)) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            if (schemaCache.size >= SchemaCacheMax) schemaCache.clear()
+            schemaCache.put(key, (version, df.schema))
+            df
+        }
+    }
+
+  private val SchemaCacheMax = 1024
+  private val schemaCache =
+    scala.collection.concurrent.TrieMap.empty[(String, Map[String, String]), (String, StructType)]
+
+  def schemaCacheClear(): Unit = schemaCache.clear()
 
   /** CSV reader. `schema=None` infers (extra scan — small inputs only);
     * header defaults on, matching the pandas `to_csv/read_csv` round-trip

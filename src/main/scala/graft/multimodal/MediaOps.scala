@@ -175,7 +175,7 @@ object MediaOps {
     * declared output sort).
     */
   def mediaDecode(spark: SparkSession, fixturePath: String = DefaultFixture): DataFrame =
-    decodeImages(spark.read.parquet(fixturePath), "media_id", "payload",
+    decodeImages(graft.io.Sources.readParquet(spark, fixturePath), "media_id", "payload",
       carryCols = Seq("kind"))
       .orderBy("media_id")
 
@@ -199,7 +199,7 @@ object MediaOps {
     */
   def mediaQuarantine(spark: SparkSession, fixturePath: String = DefaultFixture): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(fixturePath)
+    graft.io.Sources.readParquet(spark, fixturePath)
       .select(col("kind"), col("payload").cast("binary"))
       .as[(String, Array[Byte])]
       .mapPartitions { it =>

@@ -85,7 +85,7 @@ object StreamJoin {
       windowSeconds: Long = DefaultWindowSeconds
   ): DataFrame = {
     val path   = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.io.Sources.readParquet(spark, path).schema
 
     // a stream-stream join instantiates one state store PER SHUFFLE PARTITION
     // per side per microbatch — the partition count is a throughput knob, not

@@ -152,7 +152,7 @@ object StreamingMonitor {
   ): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val path   = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.io.Sources.readParquet(spark, path).schema
     val sess = StreamSession.cloned(spark, StreamJoin.StreamShufflePartitions)
     val stream = graft.Tables.normalizeEventTs(
       sess.readStream

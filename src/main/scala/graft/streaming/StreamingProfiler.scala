@@ -38,7 +38,7 @@ object StreamingProfiler {
     */
   def eventWindowCounts(spark: SparkSession, dir: String): DataFrame = {
     val path   = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.io.Sources.readParquet(spark, path).schema
     // the file-stream source wants a directory; glob-filter to the one table
     val stream = spark.readStream
       .schema(schema)

@@ -178,16 +178,52 @@ class ProfileServerSpec extends AnyFunSuite {
     assert(groups.distinct.count(_.startsWith("serve:upload:")) == 1)
   }
 
-  test("a tiny /profile runs at most 2 Spark jobs, and an upload of either format at most 3") {
+  test("a repeat /profile of an unchanged tiny table runs exactly 1 Spark job, an upload of either format at most 3") {
+    val profile = s"/profile?path=${SurfacePlans.dir}/region.parquet"
+    // the first read of the files may infer their schema: one job more
+    assert(call(profile)._1 == 200)
     val requests = Seq(
-      ("profile", 2, s"/profile?path=${SurfacePlans.dir}/region.parquet", "GET", Option.empty[String]),
+      ("profile", 1, profile, "GET", Option.empty[String]),
       ("upload", 3, "/upload?format=csv", "POST", Some(csv)),
       ("upload", 3, "/upload?format=jsonl", "POST", Some(jsonl)))
     for ((endpoint, budget, path, method, body) <- requests) {
       val groups = SparkTestBase.jobsOf(assert(call(path, method, body)._1 == 200)).groups
       assert(groups.nonEmpty && groups.forall(_.startsWith(s"serve:$endpoint:")), groups.distinct.mkString(", "))
-      assert(groups.size <= budget, s"$path ran ${groups.size} jobs")
+      if (endpoint == "profile") assert(groups.size == budget, s"$path ran ${groups.size} jobs")
+      else assert(groups.size <= budget, s"$path ran ${groups.size} jobs")
     }
+  }
+
+  test("a missing parquet path answers 404 with Spark's message") {
+    val (status, body) = call("/profile?path=/no/such/data.parquet")
+    assert(status == 404, body)
+    assert(mapper.readTree(body).path("error").asText().matches(
+      "cannot read dataset: .*PATH_NOT_FOUND.*/no/such/data\\.parquet.*"), body)
+  }
+
+  test("a table rewritten with a changed schema loads and profiles with the new one") {
+    val tmp  = java.nio.file.Files.createTempDirectory("graft-schema-rewrite").toString
+    val path = s"$tmp/region.parquet"
+    val region = Tables.load(spark, SurfacePlans.dir, "region")
+    def profiled(): Map[String, Long] = {
+      val (status, body) = call(s"/profile?path=$path")
+      assert(status == 200, body)
+      val arr = mapper.readTree(body)
+      (0 until arr.size()).map(i => arr.get(i).path("column_name").asText() -> arr.get(i).path("total_rows").asLong()).toMap
+    }
+    def loaded() = Tables.load(spark, tmp, "region").schema.map(f => f.name -> f.dataType.simpleString)
+
+    region.write.parquet(path)
+    for (_ <- 1 to 2) { // the second round reads through the cached schema
+      assert(loaded() == Seq("r_regionkey" -> "int", "r_name" -> "string"))
+      assert(profiled() == Map("r_regionkey" -> 5L, "r_name" -> 5L))
+    }
+    // a column added and a type changed, with no cache cleared in between
+    region.selectExpr("cast(r_regionkey as string) as r_regionkey", "r_name", "length(r_name) as r_len")
+      .where("r_regionkey != '0'")
+      .write.mode("overwrite").parquet(path)
+    assert(loaded() == Seq("r_regionkey" -> "string", "r_name" -> "string", "r_len" -> "int"))
+    assert(profiled() == Map("r_regionkey" -> 4L, "r_name" -> 4L, "r_len" -> 4L))
   }
 
   test("concurrent /profile and /upload replies equal the same requests sent alone") {
