@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftPersist, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftPersist, SparkSession}
 
 import graft.engine.{OracleGen, ProfilerEngine}
 import graft.model.ColumnProfile
@@ -18,12 +18,6 @@ import scala.collection.concurrent.TrieMap
 object SparkEntry {
 
   private val engine = new ProfilerEngine()
-
-  /** One full profile per (sfDir, table) per JVM run. profile_*, summary_*
-    * and summary_pii_* all derive from the same computed profile — the table
-    * is scanned once, not once per declared query (VERDICT r1 killer 4).
-    */
-  private val profileCache = TrieMap.empty[(String, String), Seq[ColumnProfile]]
 
   /** One no-AQE session clone per application, shared by the eager
     * driver-orchestrated kernels whose jobs are FIXED-SHAPE bounded
@@ -61,205 +55,215 @@ object SparkEntry {
       sess
     })
 
-  private def profiles(spark: SparkSession, dir: String, table: String): Seq[ColumnProfile] =
-    profileCache.getOrElseUpdate(
-      (dir, table),
-      engine.analyzeDataFrame(Tables.load(noAqeSession(spark), dir, table)).columnProfiles
-    )
-
-  /** The widened `documents` relation, one per (session, dir, input
-    * version) per JVM run, shared by the curation pass — `bigram_scores`,
-    * `dsir_weights`, `dsir_top`, `source_kl`, `spandedup`, `curated` and the
-    * [[clusterLabels]] cache — so the narrow scan is read and spread to
-    * cluster width once per pass instead of once per scorer. It is spread
-    * by hash of `doc_id`, the table's key, rather than [[Tables.widen]]'s
-    * round robin: as even for a key, and every consumer that groups or
-    * joins on `doc_id` then skips that exchange. The rows are kept by
-    * [[org.apache.spark.sql.GraftPersist]], a `persist` with lineage (the
-    * [[postingsCache]] precedent: lost blocks recompute after an executor
-    * loss) behind a plan leaf, so each consumer's inspected plan and its
-    * exchange/scan budgets stop at the shared rows. When `widen` would not
-    * repartition (the input already has `defaultParallelism` partitions)
-    * the artifact is the plain scan: a corpus is never copied to share a
-    * scan. The input version ([[Tables.inputVersion]]: the file listing's
-    * sizes and mtimes) is part of the key, so a rewritten table builds a
-    * fresh artifact and the stale one is unpersisted; [[clearCaches]] drops
-    * and unpersists them all. ROADMAP item 4's artifact registry will absorb
-    * this cache along with the other hand-rolled ones in this object.
+  /** The shared artifacts of the declared queries: intermediate results that
+    * several queries (and the trained-model oracles) read, built by the
+    * first consumer and reused by the rest.
+    *
+    * Key: (artifact name, `applicationId`, dir), stamped with the
+    * [[Tables.inputVersion]] of each input table the artifact reads. A
+    * lookup whose inputs now list differently builds the artifact again
+    * and releases the older value, so a rewritten table never serves
+    * results of its old files, and a frame is never handed to another
+    * application's context.
+    *
+    * Release, on replacement and in [[clear]]: a frame whose plan is a
+    * `LogicalRDD` leaf ([[org.apache.spark.sql.GraftPersist]] or
+    * `localCheckpoint`) has that RDD unpersisted, any other frame is
+    * `Dataset.unpersist`ed, and driver data needs nothing. A released local
+    * checkpoint cannot be recomputed, so a frame built before a release
+    * must not run after it.
     */
-  private val documentsCache = TrieMap.empty[(String, String, String), DataFrame]
+  private object artifacts {
+    private final case class Key(name: String, app: String, dir: String)
+    /** One artifact's inputs and, once built, its (input versions, value). */
+    private final class Slot(val inputs: Seq[String]) {
+      @volatile var built: Option[(Seq[String], Any)] = None
+    }
+    private val slots = TrieMap.empty[Key, Slot]
 
-  private def documentsKey(spark: SparkSession, dir: String): (String, String, String) =
-    (spark.sparkContext.applicationId, dir, Tables.inputVersion(spark, s"$dir/documents.parquet"))
+    private def versions(spark: SparkSession, dir: String, inputs: Seq[String]): Seq[String] =
+      // an unlistable input is left to its loader to report
+      inputs.map(t => scala.util.Try(Tables.inputVersion(spark, s"$dir/$t.parquet")).getOrElse(""))
 
-  private def widenedDocuments(spark: SparkSession, dir: String): DataFrame = {
-    val key = documentsKey(spark, dir)
-    documentsCache.getOrElse(key, documentsCache.synchronized {
-      // an older version of the same (session, dir) is stale: drop it and
-      // the labels built from it
-      def stale(k: (String, String, String)) = k != key && k._1 == key._1 && k._2 == key._2
-      for (k <- documentsCache.keys if stale(k))
-        documentsCache.remove(k).foreach(GraftPersist.unpersist)
-      clusterCache.keys.filter(stale).foreach(clusterCache.remove)
-      documentsCache.getOrElseUpdate(key, {
-        val raw  = Tables.load(spark, dir, "documents")
-        val wide = Tables.widen(raw)
-        if (wide eq raw) raw
-        else GraftPersist(
-          raw.repartition(spark.sparkContext.defaultParallelism, org.apache.spark.sql.functions.col("doc_id")))
-      })
-    })
+    def get[T](spark: SparkSession, name: String, dir: String, inputs: String*)(build: => T): T = {
+      val version = versions(spark, dir, inputs)
+      val slot = slots.getOrElseUpdate(Key(name, spark.sparkContext.applicationId, dir), new Slot(inputs))
+      slot.synchronized {
+        slot.built match {
+          case Some((v, value)) if v == version => value.asInstanceOf[T]
+          case old =>
+            slot.built = None
+            old.foreach { case (_, value) => release(value) }
+            val value = build
+            slot.built = Some((version, value))
+            value
+        }
+      }
+    }
+
+    /** The value of `name` built in this application from the current
+      * version of its inputs: for `dir`, or with no dir for the only dir
+      * that has one. Builds nothing.
+      */
+    def current[T](spark: SparkSession, name: String, dir: Option[String]): Option[T] = {
+      val app = spark.sparkContext.applicationId
+      val built = slots.toSeq.flatMap { case (k, slot) =>
+        slot.built.filter(_ => k.name == name && k.app == app && dir.forall(_ == k.dir)).map((k.dir, slot.inputs, _))
+      }
+      built match {
+        case Seq((d, inputs, (v, value))) if v == versions(spark, d, inputs) => Some(value.asInstanceOf[T])
+        case _ => None
+      }
+    }
+
+    def clear(): Unit =
+      for (slot <- slots.values) slot.synchronized {
+        slot.built.foreach { case (_, value) => release(value) }
+        slot.built = None
+      }
+
+    private def release(value: Any): Unit = value match {
+      case df: Dataset[_] => GraftPersist.unpersist(df)
+      case _              =>
+    }
   }
 
-  /** One CC fixpoint per (session, dir, `documents` input version) per JVM
-    * run, built from [[widenedDocuments]]: `dedup_clusters_documents` and
-    * `curated_documents` share the same label table (the loop's output is
+  /** A full profile of `table`: profile_*, summary_* and summary_pii_* all
+    * derive from it, and stats_* reuses its counts — the table is scanned
+    * once, not once per declared query (VERDICT r1 killer 4).
+    */
+  private def profiles(spark: SparkSession, dir: String, table: String): Seq[ColumnProfile] =
+    artifacts.get(spark, s"profile_$table", dir, table)(
+      engine.analyzeDataFrame(Tables.load(noAqeSession(spark), dir, table)).columnProfiles)
+
+  /** The widened `documents` relation shared by the curation pass —
+    * `bigram_scores`, `dsir_weights`, `dsir_top`, `source_kl`, `spandedup`,
+    * `curated` and [[clusterLabels]] — so the narrow scan is read and spread
+    * to cluster width once per pass instead of once per scorer. It is
+    * spread by hash of `doc_id`, the table's key, rather than
+    * [[Tables.widen]]'s round robin: as even for a key, and every consumer
+    * that groups or joins on `doc_id` then skips that exchange. The rows
+    * are kept by [[org.apache.spark.sql.GraftPersist]], a `persist` with
+    * lineage (lost blocks recompute after an executor loss) behind a plan
+    * leaf, so each consumer's inspected plan and its exchange/scan budgets
+    * stop at the shared rows. When `widen` would not repartition (the input
+    * already has `defaultParallelism` partitions) the artifact is the plain
+    * scan: a corpus is never copied to share a scan.
+    */
+  private def widenedDocuments(spark: SparkSession, dir: String): DataFrame =
+    artifacts.get(spark, "documents", dir, "documents") {
+      val raw  = Tables.load(spark, dir, "documents")
+      val wide = Tables.widen(raw)
+      if (wide eq raw) raw
+      else GraftPersist(
+        raw.repartition(spark.sparkContext.defaultParallelism, org.apache.spark.sql.functions.col("doc_id")))
+    }
+
+  /** Near-dup cluster labels, one CC fixpoint built from
+    * [[widenedDocuments]]: `dedup_clusters_documents`, `curated_documents`
+    * and their kin share the label table (the loop's output is
     * localCheckpointed, so reuse costs nothing) — the fixpoint is the
-    * expensive stage and was executed twice in r3. Keyed on applicationId so
-    * a cached DataFrame is never handed to a different SparkSession, and on
-    * the input version like [[documentsCache]], so labels never outlive the
-    * rows they label.
+    * expensive stage and was executed twice in r3.
     */
-  private val clusterCache = TrieMap.empty[(String, String, String), DataFrame]
-
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    clusterCache.getOrElseUpdate(
-      documentsKey(spark, dir),
-      graft.dedup.DedupClusters.dedupClusters(widenedDocuments(spark, dir))
-    )
+    artifacts.get(spark, "dedup_clusters", dir, "documents")(
+      graft.dedup.DedupClusters.dedupClusters(widenedDocuments(spark, dir)))
 
-  /** One shingle-postings exchange per (session, dir) per JVM run, persisted
-    * and shared by the capped and uncapped declared Jaccard twins (VERDICT
-    * r5 ask #3): the shingle scan+aggregate is the dominant cost of the
-    * Jaccard tier, and everything configuration-specific (df-cap, pair
-    * explosion, scoring) is downstream of it. Keyed on applicationId like
-    * [[clusterCache]]; unpersisted by [[clearCaches]].
+  /** The shingle-postings exchange, persisted and shared by the capped and
+    * uncapped declared Jaccard twins (VERDICT r5 ask #3): the shingle
+    * scan+aggregate is the dominant cost of the Jaccard tier, and
+    * everything configuration-specific (df-cap, pair explosion, scoring) is
+    * downstream of it.
     */
-  private val postingsCache = TrieMap.empty[(String, String), DataFrame]
-
   private def shinglePostings(spark: SparkSession, dir: String): DataFrame =
-    postingsCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      graft.dedup.DedupOps.shinglePostings(Tables.load(spark, dir, "documents")).persist()
-    )
+    artifacts.get(spark, "shingle_postings", dir, "documents")(
+      graft.dedup.DedupOps.shinglePostings(Tables.load(spark, dir, "documents")).persist())
 
-  /** One DISTINCT (doc_id, shingle) exchange per (session, dir) per JVM run,
-    * persisted and shared by the contamination family — the plain screen,
-    * the df-capped screen, and the decontaminated training cut (VERDICT r15
-    * #5): the tokenize+explode+distinct subtree is the dominant stage of all
-    * three, and everything configuration-specific (df-cap, minShared, the
-    * curation anti-joins) is downstream of it. Before this cache each query
-    * paid its own `localCheckpoint` of the same frame — three identical
-    * materializations per pass; the trio-context scale row in BASELINE.md
-    * measures the difference. An EAGER `localCheckpoint` (not `persist`)
-    * keeps each consumer's inspected plan truncated at the materialized
-    * frame, same as the old per-call checkpoint, so the exchange/scan
-    * budgets stay per-consumer instead of triple-counting the shared
-    * subtree. Keyed on applicationId like [[clusterCache]]; unpersisted by
-    * [[clearCaches]].
+  /** The DISTINCT (doc_id, shingle) exchange shared by the contamination
+    * family — the plain screen, the df-capped screen, and the
+    * decontaminated training cut (VERDICT r15 #5): the
+    * tokenize+explode+distinct subtree is the dominant stage of all three,
+    * and everything configuration-specific (df-cap, minShared, the curation
+    * anti-joins) is downstream of it. Before it each query paid its own
+    * `localCheckpoint` of the same frame — three identical materializations
+    * per pass; the trio-context scale row in BASELINE.md measures the
+    * difference. An EAGER `localCheckpoint` (not `persist`) keeps each
+    * consumer's inspected plan truncated at the materialized frame, so the
+    * exchange/scan budgets stay per-consumer instead of triple-counting the
+    * shared subtree.
     */
-  private val distinctShingleCache = TrieMap.empty[(String, String), DataFrame]
-
   private def distinctShingles(spark: SparkSession, dir: String): DataFrame =
-    distinctShingleCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      graft.dedup.DedupOps.shingleDF(Tables.load(spark, dir, "documents")).distinct().localCheckpoint()
-    )
+    artifacts.get(spark, "distinct_shingles", dir, "documents")(
+      graft.dedup.DedupOps.shingleDF(Tables.load(spark, dir, "documents")).distinct().localCheckpoint())
 
-  /** ONE per-customer revenue rollup per (session, dir) per JVM run, shared
-    * by the four declared OLAP reporting queries (`revenue_nation`,
-    * `revenue_share_nation`, `top_customers`, `top_customers_nation`): each
-    * previously planned its own lineitem⋈orders⋈customer fact-join tree over
-    * identical inputs — four copies of the one genuinely large join in the
-    * family (guide §2.4; the [[postingsCache]]/[[distinctShingleCache]]
-    * precedent — everything configuration-specific (nation grouping, top-N,
-    * share arithmetic) is downstream of the rollup, which is additionally
+  /** ONE per-customer revenue rollup shared by the four declared OLAP
+    * reporting queries (`revenue_nation`, `revenue_share_nation`,
+    * `top_customers`, `top_customers_nation`): each previously planned its
+    * own lineitem⋈orders⋈customer fact-join tree over identical inputs —
+    * four copies of the one genuinely large join in the family (guide §2.4;
+    * everything configuration-specific (nation grouping, top-N, share
+    * arithmetic) is downstream of the rollup, which is additionally
     * pre-aggregated per order before its first shuffle, guide §2.2/§2.3).
     * An EAGER `localCheckpoint` keeps each consumer's inspected plan
     * truncated at the materialized ≤|customer|-row frame, so exchange/scan
-    * budgets stay per-consumer ([[distinctShingleCache]] rationale).
+    * budgets stay per-consumer ([[distinctShingles]] rationale).
     * Attribution: the first consumer in bench order (`revenue_nation`) pays
-    * the rollup materialization inside its timed run — the
-    * [[profileCache]] producer-attribution convention. Keyed on
-    * applicationId like [[clusterCache]]; cleared by [[clearCaches]].
+    * the rollup materialization inside its timed run.
     */
-  private val custRevenueCache = TrieMap.empty[(String, String), DataFrame]
-
   private def custRevenue(spark: SparkSession, dir: String): DataFrame =
-    custRevenueCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
+    artifacts.get(spark, "customer_revenue", dir, "lineitem", "orders", "customer")(
       graft.olap.Reporting.customerRevenue(
         Tables.load(spark, dir, "lineitem"),
         Tables.load(spark, dir, "orders"),
-        Tables.load(spark, dir, "customer")).localCheckpoint()
-    )
+        Tables.load(spark, dir, "customer")).localCheckpoint())
 
-  /** Trained IVF centroids, one k-means run per (session, dir) shared by the
-    * declared `ivf_assign`/`ivf_topk` queries AND their oracles: training is
-    * deterministic, and the centroids are canonicalized through decimal
-    * strings so the oracle can inline bit-identical literals
-    * ([[graft.similarity.SimilarityOps.canonicalizeCentroids]]). The oracle
-    * entries read the cache populated by the query run (Verify runs every
-    * query before dumping oracle SQL); if no run trained centroids in this
-    * JVM the two entries are omitted → the driver records a weaker
-    * rows-only check instead of a false mismatch.
+  /** ONE checkpointed (vec_id, v) training projection shared by the IVF
+    * k-means and PQ codebook trainers (VERDICT r19 #1: they scan the same
+    * embeddings) — whichever trainer runs first pays the widen + checkpoint
+    * materialization inside its seeding job ([[ProducerFirst]] books it on
+    * `ivf_centroids_embeddings` in bench order).
     */
-  private val centroidCache = TrieMap.empty[(String, String), Array[Array[Double]]]
-
-  /** ONE checkpointed (vec_id, v) training projection per (session, dir),
-    * shared by the IVF k-means and PQ codebook trainers (VERDICT r19 #1:
-    * they scan the same embeddings) — whichever trainer runs first pays the
-    * widen + checkpoint materialization inside its seeding job (the
-    * [[profileCache]] producer-attribution pattern; [[ProducerFirst]] books
-    * it on `ivf_centroids_embeddings` in bench order). Keyed on
-    * applicationId like [[clusterCache]]; cleared by [[clearCaches]].
-    */
-  private val vecBaseCache = TrieMap.empty[(String, String), DataFrame]
-
   private def vecTrainingBase(spark: SparkSession, dir: String): DataFrame =
-    vecBaseCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
+    artifacts.get(spark, "vector_base", dir, "embeddings")(
       // trainers run on the shared no-AQE clone ([[noAqeSession]]): the
       // Lloyd loop's only exchange carries k×dim aggregate buffers, and AQE
       // on measured 12/15 jobs per trainer vs 6/8 off, bit-identical output
       // (OPTIMIZATION_r20.md batch 1, TrainerProbe)
       graft.similarity.KMeans.trainingBase(
-        Tables.load(noAqeSession(spark), dir, "embeddings"))
-    )
+        Tables.load(noAqeSession(spark), dir, "embeddings")))
 
+  /** Trained IVF centroids, one k-means run shared by the declared
+    * `ivf_*`/`semantic_*`/`outliers` queries AND their oracles: training is
+    * deterministic, and the centroids are canonicalized through decimal
+    * strings so the oracle can inline bit-identical literals
+    * ([[graft.similarity.SimilarityOps.canonicalizeCentroids]]). The oracle
+    * entries read the centroids built by the query run (Verify runs every
+    * query before dumping oracle SQL); if no run trained them for the
+    * current embeddings the entries are omitted → the driver records a
+    * weaker rows-only check instead of a false mismatch.
+    */
   private def trainedCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    centroidCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
+    artifacts.get(spark, "centroids", dir, "embeddings")(
       graft.similarity.SimilarityOps.canonicalizeCentroids(
-        graft.similarity.KMeans.trainCentroidsOn(vecTrainingBase(spark, dir))
-      )
-    )
+        graft.similarity.KMeans.trainCentroidsOn(vecTrainingBase(spark, dir))))
 
-  /** Semantic-cluster labels, one CC fixpoint per (session, dir) shared by
-    * the declared clusters query and the survivors cut — the [[clusterCache]]
-    * pattern on the embedding side.
+  /** Semantic-cluster labels, one CC fixpoint shared by the declared
+    * clusters query and the survivors cut — [[clusterLabels]] on the
+    * embedding side.
     */
-  private val semanticClusterCache = TrieMap.empty[(String, String), DataFrame]
-
   private def semanticLabels(spark: SparkSession, dir: String): DataFrame =
-    semanticClusterCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
+    artifacts.get(spark, "semantic_clusters", dir, "embeddings")(
       graft.similarity.SimilarityOps.semanticClusters(
-        Tables.load(spark, dir, "embeddings"), trainedCentroids(spark, dir))
-    )
+        Tables.load(spark, dir, "embeddings"), trainedCentroids(spark, dir)))
 
-  /** Trained PQ codebooks (M per-subspace L2 k-means runs), one training per
-    * (session, dir) shared by the declared `pq_*` queries and their oracles —
-    * the [[centroidCache]] pattern: deterministic training + canonicalized
-    * doubles ⇒ the oracle inlines bit-identical literals.
+  /** Trained PQ codebooks (M per-subspace L2 k-means runs) shared by the
+    * declared `pq_*` queries and their oracles — [[trainedCentroids]]'
+    * contract: deterministic training + canonicalized doubles ⇒ the oracle
+    * inlines bit-identical literals.
     */
-  private val pqCache = TrieMap.empty[(String, String), Array[Array[Array[Double]]]]
-
   private def trainedCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      graft.similarity.Pq.trainCodebooksOn(vecTrainingBase(spark, dir))
-    )
+    artifacts.get(spark, "codebooks", dir, "embeddings")(
+      graft.similarity.Pq.trainCodebooksOn(vecTrainingBase(spark, dir)))
 
   /** Training-producer queries that must run BEFORE their cache consumers
     * when timing (train → assign, the order a real pipeline uses): the ONE
@@ -268,7 +272,7 @@ object SparkEntry {
     *
     * `pq_codebooks_embeddings` joined in r19: it IS the declared PQ-training
     * query, but alphabetical order ran `ivfpq_topk_embeddings` first, so the
-    * search query carried the one-time [[pqCache]] populate (~half its
+    * search query carried the one-time [[trainedCodebooks]] build (~half its
     * booked time — the r19 ScaleAttr attribution measured search-only ~2.0 s
     * of a 4.6 s booking) while the training query booked a cache hit. Same
     * attribution honesty as ivf_centroids carrying k-means (VERDICT r12 #3);
@@ -287,26 +291,15 @@ object SparkEntry {
     */
   private[graft] val ProduceOnce: Set[String] = Set("bucketed_join_orders")
 
-  /** Drop every cross-query cache (profiles, the widened documents, cluster
-    * labels, centroids, inferred parquet schemas) — Bench calls this between
-    * repetition passes so each pass re-executes the shared stages, schema
-    * inference included, instead of timing cache hits.
+  /** Drop and release every cross-query cache: each shared artifact (see
+    * [[artifacts]]), PageRank's persisted graphs and the inferred parquet
+    * schemas. Bench calls this between repetition passes so each pass
+    * re-executes the shared stages, schema inference included, instead of
+    * timing cache hits. A frame built before this call must not run after
+    * it: its local checkpoints are gone.
     */
   private[graft] def clearCaches(): Unit = {
-    profileCache.clear()
-    documentsCache.values.foreach(GraftPersist.unpersist)
-    documentsCache.clear()
-    clusterCache.clear()
-    semanticClusterCache.clear()
-    postingsCache.values.foreach(_.unpersist(blocking = false))
-    postingsCache.clear()
-    distinctShingleCache.values.foreach(_.unpersist(blocking = false))
-    distinctShingleCache.clear()
-    centroidCache.clear()
-    pqCache.clear()
-    vecBaseCache.clear()
-    custRevenueCache.values.foreach(_.unpersist(blocking = false))
-    custRevenueCache.clear()
+    artifacts.clear()
     graft.analytics.PageRank.clearCache()
     graft.io.Sources.schemaCacheClear()
   }
@@ -334,7 +327,7 @@ object SparkEntry {
     * reused (identical counts) without touching the data again.
     */
   private def statsQuery(table: String)(spark: SparkSession, dir: String): DataFrame =
-    profileCache.get((dir, table)) match {
+    artifacts.current[Seq[ColumnProfile]](spark, s"profile_$table", Some(dir)) match {
       case Some(ps) =>
         import spark.implicits._
         val rows = ps.map(p => (p.originalName, p.totalRows, p.nullCount, p.uniqueCount, p.nullRatio, p.uniqueRatio))
@@ -1138,12 +1131,12 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on the
     * same parquet tables. Omitted for non-SQL-expressible ops (driver records
-    * a weaker rows-only check). The trained-IVF entries inline centroid
-    * literals from [[centroidCache]]; with no dir to key on, they are
-    * included only when the cache is unambiguous (exactly one trained
-    * (app, dir) entry) — [[oracleSqlFor]] is the dir-keyed form Verify uses
-    * (ADVICE r4: `values.headOption` could inline an arbitrary entry's
-    * centroids when several dirs train in one JVM).
+    * a weaker rows-only check). The trained-model entries inline the
+    * centroids and codebooks of the shared [[artifacts]]; with no dir to
+    * key on, they are included only when one dir has them (ADVICE r4:
+    * `values.headOption` could inline an arbitrary entry's centroids when
+    * several dirs train in one JVM) — [[oracleSqlFor]] is the dir-keyed
+    * form Verify uses.
     */
   def oracleSql: Map[String, String] = oracleSqlFor(None)
 
@@ -1233,25 +1226,22 @@ object SparkEntry {
       "cosine_dups_embeddings" -> graft.similarity.SimilarityOps.oracleCosineDupPairsBanded(),
       "ann_embeddings"        -> graft.similarity.SimilarityOps.oracleAnnTopK()
     ) ++ {
-      // trained-centroid oracles inline the literals cached by the query run
-      // (see trainedCentroids): keyed by the dir being dumped when the caller
-      // names one, else only an unambiguous single-entry cache is trusted.
-      // Absent/ambiguous → omitted (rows-only check), loudly: a silently
-      // weakened check was ADVICE r4's parting complaint.
-      val cents: Option[Array[Array[Double]]] = dir match {
-        case Some(d) => centroidCache.collectFirst { case ((_, dd), c) if dd == d => c }
-        case None if centroidCache.size == 1 => Some(centroidCache.values.head)
-        case None => None
+      // trained-model oracles inline the literals the query run built for
+      // the dir's current embeddings (see trainedCentroids): keyed by the
+      // dir being dumped when the caller names one, else only an
+      // unambiguous single-dir entry is trusted. Absent/ambiguous/stale →
+      // omitted (rows-only check), loudly: a silently weakened check was
+      // ADVICE r4's parting complaint.
+      def trained[T](name: String, what: String): Option[T] = {
+        val found = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+          .flatMap(s => artifacts.current[T](s, name, dir))
+        if (found.isEmpty)
+          System.err.println(s"[SparkEntry] trained-$what oracle entries OMITTED (dir=$dir, " +
+            s"no $name trained on its current embeddings) — driver will record rows-only checks")
+        found
       }
-      val cbsForIvfPq: Option[Array[Array[Array[Double]]]] = dir match {
-        case Some(d) => pqCache.collectFirst { case ((_, dd), c) if dd == d => c }
-        case None if pqCache.size == 1 => Some(pqCache.values.head)
-        case None => None
-      }
-      if (cents.isEmpty)
-        System.err.println(
-          s"[SparkEntry] trained-IVF oracle entries OMITTED (dir=$dir, cached dirs=" +
-            s"${centroidCache.keys.map(_._2).mkString("[", ", ", "]")}) — driver will record rows-only checks")
+      val cents = trained[Array[Array[Double]]]("centroids", "IVF")
+      val cbs   = trained[Array[Array[Array[Double]]]]("codebooks", "PQ")
       cents.toSeq.flatMap { c =>
         Seq(
           "ivf_centroids_embeddings" -> graft.similarity.SimilarityOps.oracleIvfCentroids(c),
@@ -1262,24 +1252,11 @@ object SparkEntry {
           "semantic_clusters_embeddings" -> graft.similarity.SimilarityOps.oracleSemanticClusters(c),
           "semantic_survivors_embeddings" -> graft.similarity.SimilarityOps.oracleSemanticSurvivors(c),
           "outliers_embeddings"      -> graft.similarity.SimilarityOps.oracleEmbeddingOutliers(c)
-        ) ++ cbsForIvfPq.toSeq.map { cb =>
-          // needs BOTH trained models — gated on the two caches together
+        ) ++ cbs.toSeq.map { cb =>
+          // needs BOTH trained models
           "ivfpq_topk_embeddings" -> graft.similarity.Pq.oracleIvfPqTopK(c, cb)
         }
-      }
-    } ++ {
-      // trained-PQ oracles: same cache-gated literal inlining as the IVF
-      // block above (absent/ambiguous → omitted loudly, rows-only check)
-      val cbs: Option[Array[Array[Array[Double]]]] = dir match {
-        case Some(d) => pqCache.collectFirst { case ((_, dd), c) if dd == d => c }
-        case None if pqCache.size == 1 => Some(pqCache.values.head)
-        case None => None
-      }
-      if (cbs.isEmpty)
-        System.err.println(
-          s"[SparkEntry] trained-PQ oracle entries OMITTED (dir=$dir, cached dirs=" +
-            s"${pqCache.keys.map(_._2).mkString("[", ", ", "]")}) — driver will record rows-only checks")
-      cbs.toSeq.flatMap { c =>
+      } ++ cbs.toSeq.flatMap { c =>
         Seq(
           "pq_codebooks_embeddings" -> graft.similarity.Pq.oracleCodebooks(c),
           "pq_codes_embeddings"     -> graft.similarity.Pq.oracleCodes(c),

@@ -159,9 +159,10 @@ object PageRank {
     * the first graph's cached relations — wrong results, found by the r11
     * eviction spec. Plan equality includes the literal data, and is also
     * stronger than the 32-bit hash a collision-tolerant cache could use
-    * (the cached value is result-bearing data). Staleness semantics match
-    * every other session cache: per-application, released by clearCaches;
-    * files rewritten in place mid-application need a clear.
+    * (the cached value is result-bearing data). Per application and
+    * released by `SparkEntry.clearCaches`, but unlike SparkEntry's shared
+    * artifacts it carries no input version: files rewritten in place
+    * mid-application need a clear.
     */
   // var (package-private) ONLY so the eviction spec can exercise the bound
   // without 64 persisted graphs; production never writes it

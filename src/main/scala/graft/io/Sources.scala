@@ -27,7 +27,8 @@ object Sources {
     * Hadoop lists literally, or a file system without a listing) is read
     * uncached, exactly `spark.read.parquet(path)`, so a missing path still
     * fails with Spark's `AnalysisException`. Bounded by cap-and-clear like
-    * [[graft.Tables.widen]]'s memo; `SparkEntry.clearCaches` drops it.
+    * [[graft.Tables.widen]]'s memo; `SparkEntry.clearCaches` drops it with
+    * the shared artifacts, which carry the same input version in their key.
     */
   def readParquet(spark: SparkSession, path: String): DataFrame =
     scala.util.Try(graft.Tables.inputVersion(spark, path)).toOption match {

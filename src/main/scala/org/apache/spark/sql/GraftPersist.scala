@@ -38,12 +38,14 @@ object GraftPersist {
       Some(Statistics(qe.optimizedPlan.stats.sizeInBytes))))
   }
 
-  /** Drop the persisted rows behind a frame built by [[apply]]; a no-op for
-    * any other frame.
+  /** Release the rows a frame keeps. A frame whose plan is a `LogicalRDD`
+    * leaf (built by [[apply]] or by `Dataset.localCheckpoint`) has that RDD
+    * unpersisted: `Dataset.unpersist` only drops `CacheManager` entries, so
+    * it frees nothing here. Any other frame is `Dataset.unpersist`ed.
     */
-  def unpersist(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
+  def unpersist(df: Dataset[_]): Unit =
+    df.queryExecution.analyzed match {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _             =>
+      case _             => df.unpersist(blocking = false)
     }
 }
