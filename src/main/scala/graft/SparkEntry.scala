@@ -136,25 +136,32 @@ object SparkEntry {
     artifacts.get(spark, s"profile_$table", dir, table)(
       engine.analyzeDataFrame(Tables.load(noAqeSession(spark), dir, table)).columnProfiles)
 
-  /** The widened `documents` relation shared by the curation pass —
+  /** The placed `documents` relation shared by the curation pass —
     * `bigram_scores`, `dsir_weights`, `dsir_top`, `source_kl`, `spandedup`,
-    * `curated` and [[clusterLabels]] — so the narrow scan is read and spread
-    * to cluster width once per pass instead of once per scorer. It is
-    * spread by hash of `doc_id`, the table's key, rather than
-    * [[Tables.widen]]'s round robin: as even for a key, and every consumer
-    * that groups or joins on `doc_id` then skips that exchange. The rows
-    * are kept by [[org.apache.spark.sql.GraftPersist]], a `persist` with
-    * lineage (lost blocks recompute after an executor loss) behind a plan
-    * leaf, so each consumer's inspected plan and its exchange/scan budgets
-    * stop at the shared rows. When `widen` would not repartition (the input
-    * already has `defaultParallelism` partitions) the artifact is the plain
-    * scan: a corpus is never copied to share a scan.
+    * `curated` and [[clusterLabels]] — so the scan is read and placed once
+    * per pass instead of once per scorer. It follows [[Tables.widen]]'s
+    * size rule:
+    *  - a table that [[Tables.fitsOneTask]] is kept in one partition. The
+    *    artifact's leaf reports `SinglePartition`, which satisfies every
+    *    consumer's `groupBy`, window and `doc_id` join, so the scorers, the
+    *    CC fixpoint and `curated` plan no exchange over it. Bytes are not
+    *    work: [[Tables.widen]] says when a consumer spreads its own rows.
+    *  - a larger narrow table is spread by hash of `doc_id`, the table's
+    *    key, rather than `widen`'s round robin: as even for a key, and
+    *    every consumer that groups or joins on `doc_id` skips that exchange.
+    *  - a table that already has `defaultParallelism` partitions is the
+    *    plain scan: a corpus is never copied to share a scan.
+    *
+    * The rows are kept by [[org.apache.spark.sql.GraftPersist]], a
+    * `persist` with lineage (lost blocks recompute after an executor loss)
+    * behind a plan leaf, so each consumer's inspected plan and its
+    * exchange/scan budgets stop at the shared rows.
     */
   private def widenedDocuments(spark: SparkSession, dir: String): DataFrame =
     artifacts.get(spark, "documents", dir, "documents") {
-      val raw  = Tables.load(spark, dir, "documents")
-      val wide = Tables.widen(raw)
-      if (wide eq raw) raw
+      val raw = Tables.load(spark, dir, "documents")
+      if (Tables.fitsOneTask(raw)) GraftPersist(raw.coalesce(1))
+      else if (Tables.widen(raw) eq raw) raw
       else GraftPersist(
         raw.repartition(spark.sparkContext.defaultParallelism, org.apache.spark.sql.functions.col("doc_id")))
     }

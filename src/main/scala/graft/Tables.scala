@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.Try
+
 /** Static testdata-table catalog (TESTDATA.md / FIXTURES.md §B).
   *
   * Column lists are compile-time constants because the DuckDB oracle SQL
@@ -79,33 +81,57 @@ object Tables {
     "embeddings" -> Seq("vec_id" -> "bigint", "embedding" -> "array<float>", "label" -> "int")
   )
 
-  /** Round-robin a narrow input out to cluster width. A table that arrives
-    * as fewer scan partitions than the cluster has cores (e.g. one parquet
-    * row group — row-group granularity caps split-based parallelism no
-    * matter what maxPartitionBytes says) would otherwise run any per-row
-    * heavy operator on one core. The pre-work shuffle is a few MB and buys
-    * full-width execution; wide inputs (any real at-scale table) pass
-    * through untouched — no shuffle.
-    *
-    * The partition probe (`df.rdd.getNumPartitions`) forces physical
-    * planning of the input on every call; it is memoized per semantically
-    * equal plan so repeated operators over the same table (the normal
-    * library usage) plan the scan once.
+  /** Bytes at or below which an input fits one task: the optimized plan's
+    * `sizeInBytes` estimate, which for a parquet scan is its compressed
+    * size on disk scaled by the columns read.
     */
-  def widen(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    val key    = (df.sparkSession, df.queryExecution.analyzed.semanticHash())
-    if (widthCache.size > WidthCacheMax) widthCache.clear() // bound memory + session pinning
-    val nParts = widthCache.getOrElseUpdate(key, df.rdd.getNumPartitions)
-    if (nParts < target) df.repartition(target) else df
-  }
+  val TinyBytes: Long = 2L << 20
 
-  /** Memo is an optimization only: entries can go stale if the files behind
-    * a path change mid-session (worst case the widen decision is off until
-    * the cache cycles) and the 32-bit plan hash can in principle collide —
-    * both bounded by the cap-and-clear policy. Callers needing an exact
-    * decision for a just-rewritten path can `widthCacheClear()`.
+  /** Whether `df`'s estimated size is at most `tinyBytes`. An estimate
+    * that cannot be computed counts as not tiny.
     */
+  def fitsOneTask(df: DataFrame, tinyBytes: Long = TinyBytes): Boolean =
+    Try(df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption.exists(_ <= tinyBytes)
+
+  /** The placement rule for an operator's input, decided by its size:
+    *  - an input that [[fitsOneTask]] runs in one partition (`coalesce(1)`,
+    *    no shuffle). Its `SinglePartition` output satisfies every later
+    *    `groupBy`, window and key join, so the planner adds no exchange and
+    *    the operator runs as one stage. At this size the per-job and
+    *    per-stage overhead costs more than the task CPU it would spread.
+    *  - a larger input that arrives as fewer partitions than the cluster
+    *    has cores (e.g. one parquet row group — row-group granularity caps
+    *    split-based parallelism no matter what maxPartitionBytes says) is
+    *    round-robined out to `defaultParallelism`, so a per-row heavy
+    *    operator does not run on one core;
+    *  - a wide input (any real at-scale table) passes through untouched.
+    *
+    * Bytes in are not work done. An operator that multiplies rows (pairs
+    * from shared buckets or shingles) or runs a heavy kernel per row can
+    * turn a tiny input into large work, and one partition runs all of it
+    * on one core; a self-join over it also computes the shared side twice,
+    * since no exchange is left to reuse. Where that work outweighs the
+    * per-job overhead the single partition saves, the operator spreads its
+    * rows after the step that multiplies them, not before: this function
+    * places only the input.
+    *
+    * The width probe (`df.rdd.getNumPartitions`) forces physical planning,
+    * so it runs only for an input that is not tiny, memoized per
+    * semantically equal plan. That memo can go stale if the files behind a
+    * path change mid-session (the spread decision is then off until the
+    * cache cycles) and its 32-bit plan hash can in principle collide — both
+    * bounded by the cap-and-clear policy; `widthCacheClear()` drops it.
+    */
+  def widen(df: DataFrame, tinyBytes: Long = TinyBytes): DataFrame =
+    if (fitsOneTask(df, tinyBytes)) df.coalesce(1)
+    else {
+      val target = df.sparkSession.sparkContext.defaultParallelism
+      val key    = (df.sparkSession, df.queryExecution.analyzed.semanticHash())
+      if (widthCache.size > WidthCacheMax) widthCache.clear() // bound memory + session pinning
+      val nParts = widthCache.getOrElseUpdate(key, df.rdd.getNumPartitions)
+      if (nParts < target) df.repartition(target) else df
+    }
+
   private val WidthCacheMax = 1024
   private val widthCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, Int), Int]

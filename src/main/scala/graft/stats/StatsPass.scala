@@ -11,7 +11,6 @@ import graft.pattern.PatternRules
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.{Duration, SECONDS}
-import scala.util.Try
 
 /** The distributed measurement layer of the profiler.
   *
@@ -59,18 +58,20 @@ import scala.util.Try
   * sum. Each job carries its caller's job group, description and tags (see
   * [[callerFuture]]).
   *
-  * Small inputs ([[Config.autoRepartition]]):
-  *  - A scan of at most [[Config.tinyScanBytes]] runs in one partition
+  * Small inputs ([[Config.autoRepartition]]): the input is placed by the
+  * one size rule, [[graft.Tables.widen]], with [[Config.tinyScanBytes]] as
+  * its threshold.
+  *  - A scan of at most that many bytes runs in one partition
   *    (`coalesce(1)`, no shuffle). Its `SinglePartition` output satisfies
   *    both `groupBy`s, so the planner inserts no exchange and each batch is
-  *    one stage and one job. Such a table fits one task anyway.
+  *    one stage and one job.
   *  - A larger table that arrives as fewer scan partitions than the cluster
-  *    has cores (e.g. one parquet row group — row-group granularity caps
-  *    split-based parallelism no matter what `maxPartitionBytes` says)
-  *    would run the whole pass in one task, so it is round-robined to
-  *    `defaultParallelism` partitions first.
-  *  - Inputs that already have enough partitions (any real at-scale table)
-  *    are left as they are.
+  *    has cores is round-robined to `defaultParallelism` partitions first.
+  *  - Inputs that already have enough partitions are left as they are.
+  *
+  * Bytes are not work: the rule holds here because the grouped pass does
+  * a bounded amount of work per input row (one row per measured column),
+  * so a table that fits one task on disk fits one task's compute too.
   */
 object StatsPass {
 
@@ -98,11 +99,11 @@ object StatsPass {
         * separate `rlike`s. Same results; flag exists as an escape hatch.
         */
       nativePatternBank: Boolean = true,
-      /** scans at or below this many bytes (catalog/file-size estimate,
-        * compressed) run in one partition with no exchange instead of being
-        * widened — the whole table fits in one task's stride.
+      /** inputs at or below this many bytes run in one partition with no
+        * exchange ([[graft.Tables.fitsOneTask]]); -1 forces the spread
+        * path
         */
-      tinyScanBytes: Long = 2L << 20,
+      tinyScanBytes: Long = graft.Tables.TinyBytes,
       /** upper bound on any one concurrent measurement job (a production
         * engine must not hang forever on a lost stage; was Duration.Inf)
         */
@@ -269,17 +270,11 @@ object StatsPass {
   private def await[T](f: Future[T], config: Config): T =
     Await.result(f, Duration(config.awaitTimeoutSec, SECONDS))
 
-  /** A tiny scan goes to one partition, so the grouped pass plans no
-    * exchange; other narrow inputs are round-robined out to cluster width
-    * (see object scaladoc; delegates to the memoized [[graft.Tables.widen]]).
-    * An unknown scan size counts as not tiny.
+  /** [[graft.Tables.widen]] with [[Config.tinyScanBytes]] as its threshold
+    * (see object scaladoc).
     */
-  private def maybeRepartition(df: DataFrame, config: Config): DataFrame = {
-    val tiny = Try(df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption.exists(_ <= config.tinyScanBytes)
-    if (!config.autoRepartition) df
-    else if (tiny) df.coalesce(1)
-    else graft.Tables.widen(df)
-  }
+  private def maybeRepartition(df: DataFrame, config: Config): DataFrame =
+    if (config.autoRepartition) graft.Tables.widen(df, config.tinyScanBytes) else df
 
   private def rawCol(f: StructField): Column = col(s"`${f.name.replace("`", "``")}`")
 

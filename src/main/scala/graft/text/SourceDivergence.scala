@@ -24,15 +24,18 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: ONE token explode feeds ONE map-side-combinable (source,
   * token) aggregate, and the sibling counts are windows over its rows: the
-  * corpus count c_tot partitioned by token, then n_s/n_types partitioned by
-  * source, which leaves the rows partitioned for the final per-source sum.
-  * The corpus total n_tot is one count of the token stream taken before
-  * the plan is built. The plan is one chain of exchanges: no window sees
-  * the raw token stream, nothing is joined back, and no two exchanges
-  * race (AQE numbers the codegen stages it creates after a race in the
-  * order the racing stages finish, so the generated source would change
-  * from run to run and miss Spark's codegen cache). The final aggregate is
-  * |sources| rows.
+  * corpus total n_tot with no partition, the corpus count c_tot
+  * partitioned by token, then n_s/n_types partitioned by source. So no
+  * driver-side count runs before the plan. Catalyst plans the
+  * partition-less window first; on a spread input its one exchange brings
+  * the |source × token| rows into one partition, which then satisfies the
+  * other windows and the final per-source sum (a single-partition input
+  * needs no exchange at all). The plan is one chain of exchanges: no
+  * window sees the raw token stream, nothing is joined back, and no two
+  * exchanges race (AQE numbers the codegen stages it creates after a race
+  * in the order the racing stages finish, so the generated source would
+  * change from run to run and miss Spark's codegen cache). The final
+  * aggregate is |sources| rows.
   */
 object SourceDivergence {
 
@@ -45,17 +48,16 @@ object SourceDivergence {
     val toks = graft.Tables.widen(docs0).select(
       col("source"),
       explode(expr(s"regexp_extract_all(${TextOps.LowerTextSql}, '${TextOps.TokenRe}', 0)")).as("token"))
-    // n_tot, the corpus token count, is one count of the token stream taken
-    // before the scoring plan is built. A global total joined back onto the
-    // rows would read them twice, and two reads of the shared documents
-    // artifact share no exchange (org.apache.spark.sql.GraftPersist)
-    val nTot = toks.count()
     val bySource = Window.partitionBy(col("source"))
+    // bounded-global-window: n_tot, the corpus token count, is a
+    // partition-less sum over the ALREADY-AGGREGATED |source × token| rows,
+    // not a count of the token stream or a total joined back onto it
     toks
       .groupBy(col("source"), col("token"))
       .agg(count(lit(1)).as("c_s"))
-      .select(col("source"), col("c_s"), sum(col("c_s")).over(Window.partitionBy(col("token"))).as("c_tot"))
-      .select(col("source"), col("c_s"), col("c_tot"), lit(nTot).as("n_tot"),
+      .select(col("source"), col("c_s"), sum(col("c_s")).over(Window.partitionBy(col("token"))).as("c_tot"),
+        sum(col("c_s")).over().as("n_tot"))
+      .select(col("source"), col("c_s"), col("c_tot"), col("n_tot"),
         sum(col("c_s")).over(bySource).as("n_s"), count(lit(1)).over(bySource).as("n_types"))
       .select(col("source"), col("n_s"), col("n_types"), expr(termExpr).as("term"))
       .groupBy(col("source"))

@@ -8,11 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.curation.Curation
 import graft.text.{BigramLm, SourceDivergence, SpanDedup, TextOps}
 
-/** The curation pass over the shared widened `documents` artifact: each
+/** The curation pass over the shared placed `documents` artifact: each
   * declared scorer built from it equals the scorer's own call on a raw
   * load, the artifact (and the cluster labels built from it) follows a
   * rewritten table without a cache clear, the re-planned scorers compile no
-  * new code on a repeat, and span dedup's keeper is exact for any bigint id.
+  * new code on a repeat and, on the single-partition artifact of a tiny
+  * table, run a bounded number of jobs with no shuffle, and span dedup's
+  * keeper is exact for any bigint id. `PlacementSpec` covers the spread
+  * artifact.
   */
 class CurationArtifactSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -73,6 +76,28 @@ class CurationArtifactSpec extends AnyFunSuite {
       val before = compiles
       run(name)
       assert(compiles == before, s"$name compiled ${compiles - before} new classes on a repeat")
+    }
+  }
+
+  test("on the single-partition artifact each re-planned scorer runs a few jobs and shuffles nothing") {
+    // name -> max jobs of one declared-output write once the artifact is
+    // built. With the artifact hash-spread over 4 partitions (its placement
+    // before the size rule, and source KL's n_tot still a separate count)
+    // the same writes ran 6, 6, 8 and 5 jobs and wrote 129, 14, 60 and
+    // 1030 kB of shuffle.
+    val budgets = Seq(
+      "bigram_scores_documents" -> 2,
+      "dsir_weights_documents" -> 2,
+      "source_kl_documents" -> 1,
+      "spandedup_documents" -> 3)
+    def write(name: String): Unit =
+      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+    for ((name, maxJobs) <- budgets) {
+      SparkEntry.clearCaches()
+      write(name)
+      val jobs = SparkTestBase.jobsOf(write(name))
+      assert(jobs.groups.size <= maxJobs, s"$name ran ${jobs.groups.size} jobs, budget $maxJobs")
+      assert(jobs.shuffleWriteBytes == 0, s"$name wrote ${jobs.shuffleWriteBytes} shuffle bytes")
     }
   }
 

@@ -138,6 +138,13 @@ class SurfacePlanHygieneSpec extends AnyFunSuite {
       ("ns/nt/v totals over the ALREADY-AGGREGATED per-token counts: " +
         "|vocab| rows, which grow sublinearly in the corpus (Heaps' law); " +
         "the token stream is aggregated before the window"),
+    // the corpus token total is a window over the aggregate, not a
+    // driver-side count of the token stream run before the plan
+    // (SourceDivergence.sourceKl, bounded-global-window comment):
+    "source_kl_documents" ->
+      ("n_tot over the ALREADY-AGGREGATED |source × token| rows: |vocab| " +
+        "per source, sublinear in the corpus (Heaps' law) and at most " +
+        "|sources| × |vocab|; the token stream is aggregated before the window"),
     "revenue_share_nation" ->
       ("corpus-total denominator over the ALREADY-AGGREGATED per-nation " +
         "revenue rows (≤25 — nation is a fixed dimension); the fact joins " +
