@@ -87,11 +87,12 @@ object Tables {
     */
   val TinyBytes: Long = 2L << 20
 
-  /** Whether `df`'s estimated size is at most `tinyBytes`. An estimate
-    * that cannot be computed counts as not tiny.
+  /** Whether `df`'s estimated size is at most [[TinyBytes]]. An estimate
+    * that cannot be computed counts as not tiny, and so does a frame built
+    * from an RDD, whose plan carries no size.
     */
-  def fitsOneTask(df: DataFrame, tinyBytes: Long = TinyBytes): Boolean =
-    Try(df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption.exists(_ <= tinyBytes)
+  def fitsOneTask(df: DataFrame): Boolean =
+    Try(df.queryExecution.optimizedPlan.stats.sizeInBytes).toOption.exists(_ <= TinyBytes)
 
   /** The placement rule for an operator's input, decided by its size:
     *  - an input that [[fitsOneTask]] runs in one partition (`coalesce(1)`,
@@ -122,8 +123,8 @@ object Tables {
     * cache cycles) and its 32-bit plan hash can in principle collide — both
     * bounded by the cap-and-clear policy; `widthCacheClear()` drops it.
     */
-  def widen(df: DataFrame, tinyBytes: Long = TinyBytes): DataFrame =
-    if (fitsOneTask(df, tinyBytes)) df.coalesce(1)
+  def widen(df: DataFrame): DataFrame =
+    if (fitsOneTask(df)) df.coalesce(1)
     else {
       val target = df.sparkSession.sparkContext.defaultParallelism
       val key    = (df.sparkSession, df.queryExecution.analyzed.semanticHash())

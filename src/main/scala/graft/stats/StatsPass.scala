@@ -59,9 +59,8 @@ import scala.concurrent.duration.{Duration, SECONDS}
   * [[callerFuture]]).
   *
   * Small inputs ([[Config.autoRepartition]]): the input is placed by the
-  * one size rule, [[graft.Tables.widen]], with [[Config.tinyScanBytes]] as
-  * its threshold.
-  *  - A scan of at most that many bytes runs in one partition
+  * one size rule, [[graft.Tables.widen]].
+  *  - A scan of at most [[graft.Tables.TinyBytes]] runs in one partition
   *    (`coalesce(1)`, no shuffle). Its `SinglePartition` output satisfies
   *    both `groupBy`s, so the planner inserts no exchange and each batch is
   *    one stage and one job.
@@ -99,11 +98,6 @@ object StatsPass {
         * separate `rlike`s. Same results; flag exists as an escape hatch.
         */
       nativePatternBank: Boolean = true,
-      /** inputs at or below this many bytes run in one partition with no
-        * exchange ([[graft.Tables.fitsOneTask]]); -1 forces the spread
-        * path
-        */
-      tinyScanBytes: Long = graft.Tables.TinyBytes,
       /** upper bound on any one concurrent measurement job (a production
         * engine must not hang forever on a lost stage; was Duration.Inf)
         */
@@ -270,11 +264,11 @@ object StatsPass {
   private def await[T](f: Future[T], config: Config): T =
     Await.result(f, Duration(config.awaitTimeoutSec, SECONDS))
 
-  /** [[graft.Tables.widen]] with [[Config.tinyScanBytes]] as its threshold
-    * (see object scaladoc).
+  /** [[graft.Tables.widen]] unless [[Config.autoRepartition]] is off (see
+    * object scaladoc).
     */
   private def maybeRepartition(df: DataFrame, config: Config): DataFrame =
-    if (config.autoRepartition) graft.Tables.widen(df, config.tinyScanBytes) else df
+    if (config.autoRepartition) graft.Tables.widen(df) else df
 
   private def rawCol(f: StructField): Column = col(s"`${f.name.replace("`", "``")}`")
 

@@ -30,12 +30,13 @@ import org.apache.spark.sql.functions._
   * partition-less window first; on a spread input its one exchange brings
   * the |source × token| rows into one partition, which then satisfies the
   * other windows and the final per-source sum (a single-partition input
-  * needs no exchange at all). The plan is one chain of exchanges: no
-  * window sees the raw token stream, nothing is joined back, and no two
-  * exchanges race (AQE numbers the codegen stages it creates after a race
-  * in the order the racing stages finish, so the generated source would
-  * change from run to run and miss Spark's codegen cache). The final
-  * aggregate is |sources| rows.
+  * needs no exchange at all). That one task sorts at most |sources| ×
+  * |vocab| rows, where the count it replaces re-tokenized the corpus. The
+  * plan is one chain of exchanges: no window sees the raw token stream,
+  * nothing is joined back, and no two exchanges race (AQE numbers the
+  * codegen stages it creates after a race in the order the racing stages
+  * finish, so the generated source would change from run to run and miss
+  * Spark's codegen cache). The final aggregate is |sources| rows.
   */
 object SourceDivergence {
 
