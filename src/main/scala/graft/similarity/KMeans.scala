@@ -1,7 +1,10 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Spherical k-means training for the IVF tier — replaces
   * [[SimilarityOps.ivfAssign]]'s deterministic first-K centroid
@@ -9,13 +12,19 @@ import org.apache.spark.sql.functions._
   * corpus geometry (tighter cells → fewer probes for the same recall).
   *
   * Scale shape per round: ONE scan assigns every vector to its max-cosine
-  * centroid (broadcast of k×dim doubles — tiny by construction), then a
-  * (cell, dimension) sum/count aggregate. The driver receives exactly
-  * k×dim aggregate rows (16×64 here) to rebuild centroids plus one bounded
-  * seeding sample ([[SeedSampleCap]] × dim) — never unbounded data rows;
-  * the iteration count is a fixed small constant. That is the
-  * standard distributed k-means: cost = iters × (1 scan + 1 bounded
-  * aggregate).
+  * centroid (the k×dim matrix rides the assignment kernel — tiny by
+  * construction), then a (cell, dimension) sum/count aggregate. On a base
+  * of several partitions the driver receives exactly k×dim aggregate rows
+  * (16×64 here) per round to rebuild centroids plus one bounded seeding
+  * sample ([[SeedSampleCap]] × dim); the iteration count is a fixed small
+  * constant. That is the standard distributed k-means: cost = iters ×
+  * (1 scan + 1 bounded aggregate). A base of ONE partition is collected
+  * once and trained on the driver, so there the driver holds the base:
+  * [[graft.Tables.widen]] leaves an input in one partition when it
+  * [[graft.Tables.fitsOneTask fits one task]], at most
+  * [[graft.Tables.TinyBytes]] on disk (about 5 MB of doubles for the
+  * sf0.1 embeddings). On a one-core cluster a larger input also arrives
+  * in one partition, and so is trained on the driver too.
   *
   * Cosine assignment is scale-invariant, so cell means are used unnormalized
   * (spherical k-means' normalization would not change any assignment).
@@ -33,9 +42,9 @@ object KMeans {
 
   /** Seeding-sample bound: the driver pulls at most this many vectors for
     * farthest-point seeding (cap × dim doubles ≈ 1 MB at 2048×64) — the
-    * standard bounded-sample seeding every distributed k-means uses; the
-    * Lloyd's rounds that actually fit centroids to the corpus stay fully
-    * distributed.
+    * standard bounded-sample seeding every distributed k-means uses; on a
+    * base of several partitions the Lloyd's rounds that actually fit
+    * centroids to the corpus stay fully distributed.
     */
   val SeedSampleCap = 2048
 
@@ -62,26 +71,36 @@ object KMeans {
     * trainer — SparkEntry shares one per (session, dir), VERDICT r19 #1)
     * re-reads a materialized narrow frame instead of re-scanning and
     * re-shuffling the table. LAZY checkpoint: the frame materializes inside
-    * the first consuming job (seeding scans every partition), so the
-    * separate eager materialization job the r19 form paid is gone.
+    * the first consuming job (seeding scans every partition, and so does the
+    * one-partition trainer's collect), so the separate eager materialization
+    * job the r19 form paid is gone.
     */
   def trainingBase(emb: DataFrame): DataFrame =
     graft.Tables.widen(emb)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .localCheckpoint(eager = false)
 
-  private def farthestPointInitOn(base: DataFrame, k: Int): Array[Array[Double]] = {
+  private def farthestPointInitOn(base: DataFrame, k: Int): Array[Array[Double]] =
     // ONE bounded action: the deterministic seed sample (zero vectors are
     // never eligible as seeds — a zero-norm centroid has no defined cosine)
-    val sample: Array[(Long, Array[Double])] = base
+    farthestPoint(base
       .where(DotProduct(col("v"), col("v")) > 0)
-      .withColumn("h", md5(concat(col("vec_id").cast("string"), lit(":seed"))))
+      .withColumn("h", seedHash)
       .orderBy(col("h"), col("vec_id"))
       .limit(SeedSampleCap)
       .select(col("vec_id"), col("v"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+      .sortBy(_._1), k)
+
+  /** The key the seed sample is ordered by, ahead of `vec_id`. */
+  private def seedHash = md5(concat(col("vec_id").cast("string"), lit(":seed")))
+
+  /** The greedy farthest-point step over a seed sample sorted by vec_id:
+    * start from its first vector, then repeatedly add the one least similar
+    * to every chosen seed. Both trainer paths seed through it.
+    */
+  private def farthestPoint(sample: Array[(Long, Array[Double])], k: Int): Array[Array[Double]] = {
     require(sample.nonEmpty, "farthestPointInit: no non-zero vectors to seed from")
     // clamp rather than throw on tiny corpora: fewer seedable vectors than k
     // simply means fewer cells (the r4 require hard-failed the declared IVF
@@ -128,6 +147,13 @@ object KMeans {
     * the entry SparkEntry uses so the IVF and PQ trainers share ONE
     * checkpointed corpus frame per (session, dir).
     *
+    * A base of ONE partition trains on the driver ([[trainOnDriver]]): one
+    * job instead of the seeding job and one job per round, which at that
+    * size cost more in per-job overhead than in task time. The base is one
+    * partition exactly when [[graft.Tables.widen]] found that the input
+    * fits one task (or the cluster has one core), so no separate threshold
+    * decides the path. A wider base runs the distributed loop below.
+    *
     * Per-round shape (r20): cell assignment is one IN-ROW
     * [[CentroidArgMax]] projection (the centroid matrix rides the kernel
     * object in the codegen `references`, so the generated source — and the
@@ -157,7 +183,14 @@ object KMeans {
       base: DataFrame,
       k: Int = SimilarityOps.IvfCentroids,
       iters: Int = 5
-  ): Array[Array[Double]] = {
+  ): Array[Array[Double]] =
+    if (base.rdd.getNumPartitions == 1) trainOnDriver(base, k, iters)
+    else trainDistributed(base, k, iters)
+
+  /** [[trainCentroidsOn]] for a base of several partitions: the seeding job
+    * and one job per round.
+    */
+  private def trainDistributed(base: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
     var centroids: Array[Array[Double]] = farthestPointInitOn(base, k)
 
     for (_ <- 0 until iters) {
@@ -177,6 +210,65 @@ object KMeans {
           r.getAs[Double]("s") / r.getAs[Long]("n")
       }
       centroids = next
+    }
+    centroids
+  }
+
+  /** [[trainCentroidsOn]] for a base of one partition, in ONE Spark job:
+    * collect the base once, then seed and run every Lloyd's round on the
+    * driver. Each step replays the distributed plan's arithmetic, so the
+    * centroids are bit-identical to the loop's on the same base:
+    *  - the seed sample is the non-zero vectors ordered by (h, vec_id) in
+    *    Spark's UTF-8 byte order, the first [[SeedSampleCap]] of them, then
+    *    sorted by vec_id;
+    *  - cells come from the same [[CentroidArgMaxKernel]] the generated code
+    *    calls (a null slot reads 0.0 there as here);
+    *  - each (cell, pos) sum runs from 0.0 in collect order, the partition
+    *    order the single-task aggregate folds in; a null element counts in
+    *    `n` and adds nothing to `s`, a null vector adds no rows, and an
+    *    empty (cell, pos) keeps its centroid component.
+    */
+  private def trainOnDriver(base: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
+    val rows = base
+      .select(col("vec_id"), col("v"), (DotProduct(col("v"), col("v")) > 0).as("nz"), seedHash.as("h"))
+      .collect()
+
+    implicit val byteOrder: Ordering[UTF8String] = Ordering.fromLessThan(_.compareTo(_) < 0)
+    val sample = rows
+      .filter(r => !r.isNullAt(2) && r.getBoolean(2))
+      .map(r => (UTF8String.fromString(r.getString(3)), r.getLong(0), r))
+      .sortBy(t => (t._1, t._2))
+      .take(SeedSampleCap)
+      .map { case (_, id, r) => (id, r.getSeq[Double](1).toArray) }
+      .sortBy(_._1)
+    var centroids = farthestPoint(sample, k)
+
+    // (values with null slots at 0.0, null mask) per non-null vector
+    val vecs: Array[(ArrayData, Array[Boolean])] = rows.filterNot(_.isNullAt(1)).map { r =>
+      val xs = r.getSeq[java.lang.Double](1)
+      (UnsafeArrayData.fromPrimitiveArray(xs.map(x => if (x == null) 0.0 else x.doubleValue).toArray),
+        xs.map(_ == null).toArray)
+    }
+    val dim = vecs.iterator.map(_._2.length).maxOption.getOrElse(0)
+
+    for (_ <- 0 until iters) {
+      val kernel = new CentroidArgMaxKernel(centroids, cosine = true)
+      val s = Array.fill(centroids.length, dim)(0.0)
+      val n = Array.fill(centroids.length, dim)(0L)
+      for ((v, nulls) <- vecs) {
+        val cell = kernel.argmax(v)
+        var p = 0
+        while (p < nulls.length) {
+          n(cell)(p) += 1
+          if (!nulls(p)) s(cell)(p) += v.getDouble(p)
+          p += 1
+        }
+      }
+      centroids = centroids.indices.map { c =>
+        val next = centroids(c).clone()
+        for (p <- 0 until dim if n(c)(p) > 0) next(p) = s(c)(p) / n(c)(p)
+        next
+      }.toArray
     }
     centroids
   }

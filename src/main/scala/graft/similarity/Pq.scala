@@ -253,7 +253,10 @@ object Pq {
       (c, code) <- cb.zipWithIndex.toSeq
       (x, p) <- c.zipWithIndex.toSeq
     } yield (m.toLong, code.toLong, p.toLong, x)
-    spark.createDataset(rows).toDF("m", "code", "pos", "component").orderBy("m", "code", "pos")
+    // m×k×dsub rows always fit one task: sorting them in one partition
+    // plans no range exchange
+    spark.createDataset(rows).toDF("m", "code", "pos", "component")
+      .coalesce(1).orderBy("m", "code", "pos")
   }
 
   def oracleCodebooks(codebooks: Array[Array[Array[Double]]]): String = {

@@ -256,7 +256,10 @@ object SimilarityOps {
       (c, i) <- centroids.zipWithIndex.toSeq
       (x, p) <- c.zipWithIndex
     } yield (i.toLong, p.toLong, x)
-    spark.createDataset(rows).toDF("centroid_id", "pos", "component").orderBy("centroid_id", "pos")
+    // k×dim rows always fit one task: sorting them in one partition plans
+    // no range exchange
+    spark.createDataset(rows).toDF("centroid_id", "pos", "component")
+      .coalesce(1).orderBy("centroid_id", "pos")
   }
 
   /** DuckDB twin of [[ivfCentroidsDF]]: the same canonical decimal strings,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.curation.Curation
+import graft.similarity.KMeans
 import graft.text.{BigramLm, SourceDivergence, SpanDedup, TextOps}
 
 /** The curation pass over the shared placed `documents` artifact: each
@@ -99,6 +100,23 @@ class CurationArtifactSpec extends AnyFunSuite {
       assert(jobs.groups.size <= maxJobs, s"$name ran ${jobs.groups.size} jobs, budget $maxJobs")
       assert(jobs.shuffleWriteBytes == 0, s"$name wrote ${jobs.shuffleWriteBytes} shuffle bytes")
     }
+  }
+
+  test("the IVF trainer runs one job on a tiny input, and the declared centroids a few with no shuffle") {
+    def load(): DataFrame = Tables.load(spark, dir, "embeddings")
+    load() // a repeat read infers no schema
+    val train = SparkTestBase.jobsOf(KMeans.trainCentroids(load()))
+    assert(train.groups.size == 1, s"training ran ${train.groups.size} jobs")
+    // the first build and write after clearCaches: a schema read under the
+    // query's session and one under the trainer's, the trainer's collect and
+    // the write. The distributed trainer and the range-sorted write ran 11
+    // jobs here and shuffled the k×dim sums of every round.
+    SparkEntry.clearCaches()
+    val jobs = SparkTestBase.jobsOf(
+      SparkEntry.queries("ivf_centroids_embeddings")(spark, dir)
+        .write.format("noop").mode("overwrite").save())
+    assert(jobs.groups.size <= 4, s"ivf_centroids_embeddings ran ${jobs.groups.size} jobs")
+    assert(jobs.shuffleWriteBytes == 0, s"ivf_centroids_embeddings wrote ${jobs.shuffleWriteBytes} shuffle bytes")
   }
 
   test("span dedup keeps the first occurrence for ids beyond 9.2e12") {

@@ -94,7 +94,7 @@ class ExchangeBudgetSpec extends AnyFunSuite {
     "incremental_pairs_documents" -> (0, 1),
     "interarrival_events" -> (1, 0),
     "ivf_assign_embeddings" -> (0, 0),
-    "ivf_centroids_embeddings" -> (1, 0),
+    "ivf_centroids_embeddings" -> (0, 0),
     "ivf_recall_embeddings" -> (4, 2),
     "ivf_topk_embeddings" -> (0, 1),
     "ivfpq_topk_embeddings" -> (0, 3),
@@ -130,7 +130,7 @@ class ExchangeBudgetSpec extends AnyFunSuite {
     "pagerank_events" -> (1, 0),
     "pagerank_users" -> (30, 7),
     "partitioned_roundtrip_documents" -> (1, 0),
-    "pq_codebooks_embeddings" -> (1, 0),
+    "pq_codebooks_embeddings" -> (0, 0),
     "pq_codes_embeddings" -> (0, 0),
     "pq_topk_embeddings" -> (0, 1),
     "profile_customer" -> (1, 0),

@@ -63,7 +63,9 @@ class MainSourceLintSpec extends AnyFunSuite {
     "vault/DataVault.scala" ->
       (1, "fkCandidates: ONE |suffix-classes|-row collect of per-class 1-row pivot aggregates (orphan counts + uniqueness, r19)"),
     "similarity/KMeans.scala" ->
-      (3, "k×dim centroid rows from the capped-sample trainer"),
+      (4, "k×dim centroid rows from the capped-sample trainer; the " +
+        "one-partition trainer's base, one partition only when Tables.widen " +
+        "found it fits one task (≤ TinyBytes on disk)"),
     "similarity/Pq.scala" ->
       (2, "PQ codebook rows (m × k × dsub floats, config-bounded)"),
     "analytics/EventOps.scala" ->
@@ -75,15 +77,18 @@ class MainSourceLintSpec extends AnyFunSuite {
         "fast path (r19) — ≤4 MiB on the driver, falls back to the star loop")
   )
 
-  /** Every `.rdd` in main: reserved for the one partition-count probe plus
-    * the global-ranks zipWithIndex path.
+  /** Every `.rdd` in main: reserved for the partition-count probes (the
+    * width probe and the trainer's path choice) plus the global-ranks
+    * zipWithIndex path.
     */
   private val rddInventory: Map[String, (Int, String)] = Map(
     "stats/NumericStats.scala" ->
       (1, "globalRanks rides zipWithIndex over its ordered relation (the " +
         "quantile kernel is radix histograms since r19 — no RDD view)"),
     "Tables.scala" ->
-      (1, "df.rdd.getNumPartitions width probe, cached per input")
+      (1, "df.rdd.getNumPartitions width probe, cached per input"),
+    "similarity/KMeans.scala" ->
+      (1, "base.rdd.getNumPartitions picks the one-partition trainer")
   )
 
   /** crossJoins allowed WITHOUT a broadcast on the same call line: each is

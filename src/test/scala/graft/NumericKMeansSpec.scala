@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.similarity.{KMeans, SimilarityOps}
@@ -7,7 +11,10 @@ import graft.stats.NumericStats
 
 /** Round-3 numeric envelope / histogram / k-means training. Cross-engine
   * agreement of the declared numstats/hist queries is covered by the oracle
-  * gate; these assert the semantics and the training-quality claim.
+  * gate; these assert the semantics, the training-quality claim and the
+  * agreement of the two k-means trainer paths. `PlacementSpec` compares the
+  * declared centroids over padded `embeddings`, which train on the
+  * distributed path.
   */
 class NumericKMeansSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -107,6 +114,47 @@ class NumericKMeansSpec extends AnyFunSuite {
     val a = KMeans.trainCentroids(emb, k = 4, iters = 2)
     val b = KMeans.trainCentroids(emb, k = 4, iters = 2)
     assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq)
+  }
+
+  test("kmeans: the one-partition and the distributed trainer agree on an adversarial corpus") {
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType, containsNull = true), nullable = true)))
+    // a zero vector, a null vector, a null element, duplicate directions
+    // whose cosine scores tie, and k = 8 over 7 seedable vectors in 5
+    // directions, so seeding repeats a seed and the repeats' cells stay empty
+    val rows = Seq[Row](
+      Row(0L, Seq(1f, 0f, 0f, 0f)),
+      Row(1L, Seq(1f, 0f, 0f, 0f)),
+      Row(2L, Seq(0f, 1f, 0f, 0f)),
+      Row(3L, Seq(0f, 0.5f, 0f, 0f)),
+      Row(4L, Seq(0f, 0f, 0f, 0f)),
+      Row(5L, null),
+      Row(6L, Seq(0.25f, null, 0.75f, 0f)),
+      Row(7L, Seq(0f, 0f, 1f, 0f)),
+      Row(8L, Seq(-1f, 0f, 0f, 0f)))
+    def onePartition(rs: Seq[Row]): DataFrame = spark.createDataFrame(rs.asJava, schema)
+    // built from an RDD, the frame has no size estimate, so it is spread
+    def spread(rs: Seq[Row]): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs, 3), schema)
+    assert(KMeans.trainingBase(onePartition(rows)).rdd.getNumPartitions == 1)
+    assert(KMeans.trainingBase(spread(rows)).rdd.getNumPartitions > 1)
+
+    def train(df: DataFrame): Seq[Seq[Double]] =
+      SimilarityOps.canonicalizeCentroids(KMeans.trainCentroids(df, k = 8, iters = 3))
+        .map(_.toSeq).toSeq
+    val small = train(onePartition(rows))
+    assert(small.size == 7)
+    // id 6 seeds three cells (its self-cosine rounds below 1); it fills one,
+    // whose null-only component means to 0, and the two empty ones keep it
+    assert(small.count(_ == Seq(0.25, 0.0, 0.75, 0.0)) == 3, small)
+    assert(small == train(spread(rows)))
+
+    val allZero = Seq[Row](Row(0L, Seq(0f, 0f)), Row(1L, null), Row(2L, Seq(0f, null)))
+    for (df <- Seq(onePartition(allZero), spread(allZero))) {
+      val e = intercept[IllegalArgumentException](KMeans.trainCentroids(df))
+      assert(e.getMessage.contains("farthestPointInit: no non-zero vectors to seed from"))
+    }
   }
 
   test("corrEnvelope: exact decimal sums over pairwise-complete rows") {

@@ -5,14 +5,18 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.similarity.KMeans
+
 /** Both sides of [[Tables.widen]]'s size rule on the declared surface.
   * Every sf0.001 and sf0.01 input fits one task, so the other specs see
   * only the single-partition plans. Here `documents` and `embeddings` are
   * rewritten with an incompressible padding column to many times
   * [[Tables.TinyBytes]] ([[PlacementSpec.padded]]), which sends them, and
   * the shared `documents` artifact, down the spread path; each query must
-  * return the rows it returns on the original tables. `ExchangeBudgetSpec`
-  * budgets the exchanges of the spread plans.
+  * return the rows it returns on the original tables. For
+  * `ivf_centroids_embeddings` that compares the distributed k-means trainer
+  * on the padded table with the one-partition trainer on the original.
+  * `ExchangeBudgetSpec` budgets the exchanges of the spread plans.
   */
 class PlacementSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -34,6 +38,14 @@ class PlacementSpec extends AnyFunSuite {
       case r: LogicalRDD => r.rdd.getNumPartitions
     }.toSet
 
+  /** Whether `df`'s plan puts an input in one partition: a `Coalesce 1`
+    * over anything but a local relation. The trained centroids are such a
+    * relation, sorted in one partition at any input size.
+    */
+  private def coalescesInput(df: DataFrame): Boolean =
+    """Coalesce 1\n[ :]*\+- (?!(\*\(\d+\) )?LocalTableScan )""".r
+      .findFirstIn(df.queryExecution.executedPlan.toString).isDefined
+
   /** Rows in a fixed order: ties of a query's own sort may come out in
     * either order on the two paths.
     */
@@ -48,6 +60,11 @@ class PlacementSpec extends AnyFunSuite {
     val width = spark.sparkContext.defaultParallelism
     assert(leafPartitions("bigram_scores_documents", padded) == Set(width))
     assert(leafPartitions("bigram_scores_documents", dir) == Set(1))
+    // the IVF centroids train on the distributed path over padded embeddings
+    def trainerWidth(d: String): Int =
+      KMeans.trainingBase(Tables.load(spark, d, "embeddings")).rdd.getNumPartitions
+    assert(trainerWidth(padded) == width)
+    assert(trainerWidth(dir) == 1)
   }
 
   test("every curation and pair query returns the same rows on both paths") {
@@ -56,8 +73,7 @@ class PlacementSpec extends AnyFunSuite {
       val large = SparkEntry.queries(name)(spark, padded)
       val want  = rows(small, small.columns.toSeq)
       assert(want.nonEmpty, s"$name is empty at $dir")
-      assert(!large.queryExecution.executedPlan.toString.contains("Coalesce 1"),
-        s"$name reads an input that fits one task on the padded dir")
+      assert(!coalescesInput(large), s"$name reads an input that fits one task on the padded dir")
       assert(rows(large, small.columns.toSeq) == want, s"$name differs on the spread path")
     }
   }
