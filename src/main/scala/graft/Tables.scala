@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition}
+import org.apache.spark.sql.execution.LogicalRDD
 
 import scala.util.Try
 
@@ -116,6 +118,13 @@ object Tables {
     * rows after the step that multiplies them, not before: this function
     * places only the input.
     *
+    * `widen` is idempotent: an input whose analyzed plan is already one
+    * partition ([[onePartition]]) is returned as it is, so a consumer of
+    * the one-partition `documents` artifact, or of an earlier `widen`,
+    * plans no `Coalesce 1` over its scan. Coalescing such an input again
+    * changes no placement, but the coalesce does not take part in
+    * whole-stage codegen, so it cuts the consumer's pipeline in two.
+    *
     * The width probe (`df.rdd.getNumPartitions`) forces physical planning,
     * so it runs only for an input that is not tiny, memoized per
     * semantically equal plan. That memo can go stale if the files behind a
@@ -124,7 +133,8 @@ object Tables {
     * bounded by the cap-and-clear policy; `widthCacheClear()` drops it.
     */
   def widen(df: DataFrame): DataFrame =
-    if (fitsOneTask(df)) df.coalesce(1)
+    if (onePartition(df.queryExecution.analyzed)) df
+    else if (fitsOneTask(df)) df.coalesce(1)
     else {
       val target = df.sparkSession.sparkContext.defaultParallelism
       val key    = (df.sparkSession, df.queryExecution.analyzed.semanticHash())
@@ -132,6 +142,20 @@ object Tables {
       val nParts = widthCache.getOrElseUpdate(key, df.rdd.getNumPartitions)
       if (nParts < target) df.repartition(target) else df
     }
+
+  /** Whether `plan` is one partition by construction, read from the
+    * analyzed plan with no physical planning: a `coalesce(1)` or
+    * `repartition(1)`, a `LogicalRDD` leaf that reports one partition (a
+    * persisted or checkpointed one-partition frame), or a projection or
+    * filter over one of these. A plan this cannot tell counts as not one
+    * partition.
+    */
+  private def onePartition(plan: LogicalPlan): Boolean = plan match {
+    case Repartition(1, _, _)        => true
+    case r: LogicalRDD               => r.outputPartitioning.numPartitions == 1
+    case p @ (_: Project | _: Filter) => onePartition(p.children.head)
+    case _                           => false
+  }
 
   private val WidthCacheMax = 1024
   private val widthCache =

@@ -19,16 +19,17 @@ import graft.text.TextOps
   * stage oracles as CTEs — so the integration (joins, filter order,
   * survivor rule) is hash-checked end-to-end, not just the parts.
   *
-  * Plan shape: three independent single-scan pipelines over the documents
-  * table joined on doc_id — at 100 TB each stage is the operator's own
-  * scalable plan (per-row quality/langid projections, bucketed pair
-  * generation + bounded label propagation), and the final join keys on the
-  * (already hash-distributed) doc_id. Filters are conjunctive so stage
-  * ORDER is a pure cost choice; the declared form cuts the labels to the
-  * survivors (cluster_id = doc_id) before the join, so the join has the
-  * one key doc_id — a docs side already partitioned by doc_id (the shared
-  * documents artifact in `SparkEntry`) then needs no exchange — and
-  * filters the per-doc classes after it.
+  * Plan shape: one per-row projection over the documents table (the
+  * quality and language columns of [[TextOps.qualityAndLang]], `text`
+  * tokenized once) joined on doc_id with the cluster labels — at 100 TB the
+  * labels are the operator's own scalable plan (bucketed pair generation +
+  * bounded label propagation), and the join keys on the (already
+  * hash-distributed) doc_id. Filters are conjunctive so stage ORDER is a
+  * pure cost choice; the declared form cuts the labels to the survivors
+  * (cluster_id = doc_id) and the documents to their kept classes before
+  * the join, so the join has the one key doc_id — a docs side already
+  * partitioned by doc_id (the shared documents artifact in `SparkEntry`)
+  * then needs no exchange.
   */
 object Curation {
 
@@ -41,16 +42,18 @@ object Curation {
     * the loop (SparkEntry shares them across declared queries this way).
     */
   def curatedDocuments(docs: DataFrame, clusters: DataFrame): DataFrame = {
-    val q = TextOps.quality(docs).select(col("doc_id"), col("n_tokens"), col("quality_class"))
-    val l = TextOps.langId(docs)
-      .select(col("doc_id").as("l_doc_id"), col("lang"), col("pred_lang"))
     val survivors = clusters
       .where(col("cluster_id") === col("doc_id"))
       .select(col("doc_id").as("c_doc_id"))
-    q.join(l, q("doc_id") === l("l_doc_id"))
-      .join(survivors, q("doc_id") === survivors("c_doc_id"))
-      .where(col("quality_class") =!= "poor" && col("pred_lang") =!= "und")
-      .select(col("doc_id"), col("lang"), col("pred_lang"), col("quality_class"), col("n_tokens"))
+    val out  = Seq("doc_id", "lang", "pred_lang", "quality_class", "n_tokens").map(col)
+    val kept = col("quality_class") =!= "poor" && col("pred_lang") =!= "und"
+    // the filter is a generator's condition, not a `where`: Catalyst pushes
+    // a filter through a projection by copying the projected expressions
+    // into it, which would run every regex and marker count twice per row
+    TextOps.qualityAndLang(docs)
+      .select(inline(when(kept, array(struct(out: _*)))))
+      .join(survivors, col("doc_id") === survivors("c_doc_id"))
+      .select(out: _*)
       .orderBy("doc_id")
   }
 

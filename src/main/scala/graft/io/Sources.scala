@@ -18,10 +18,12 @@ object Sources {
   /** Parquet reader with the inferred schema cached. Inferring a parquet
     * schema runs a Spark job (a footer read on an executor); a read with a
     * declared schema plans with none. The schema is a function of the files
-    * and of the session's SQL conf (NTZ, nanos and binary-as-string
-    * inference read it), so it is cached under (path, SQL conf) and stamped
-    * with the path's [[graft.Tables.inputVersion]]: a read whose file
-    * listing matches the stamp is `spark.read.schema(cached).parquet(path)`,
+    * and of the session's [[inferenceConf]] (NTZ, nanos and binary-as-string
+    * inference read it), so it is cached under (path, inference conf) and
+    * stamped with the path's [[graft.Tables.inputVersion]]. Two sessions
+    * that differ only in other confs, such as a clone with AQE off, share
+    * the entry. A read whose file listing matches the stamp is
+    * `spark.read.schema(cached).parquet(path)`,
     * and one whose listing differs infers again and replaces the entry.
     * A path that cannot be listed (missing, a glob, which Spark expands but
     * Hadoop lists literally, or a file system without a listing) is read
@@ -34,7 +36,7 @@ object Sources {
     scala.util.Try(graft.Tables.inputVersion(spark, path)).toOption match {
       case None => spark.read.parquet(path)
       case Some(version) =>
-        val key = (path, spark.conf.getAll)
+        val key = (path, inferenceConf(spark))
         schemaCache.get(key) match {
           case Some((`version`, schema)) => spark.read.schema(schema).parquet(path)
           case _ =>
@@ -43,6 +45,17 @@ object Sources {
             schemaCache.put(key, (version, df.schema))
             df
         }
+    }
+
+  /** The SQL confs a parquet schema inference can read: every conf that
+    * names parquet (including the legacy nanos flag), the file-source
+    * (`spark.sql.files.*`, `spark.sql.sources.*`) and case-sensitivity
+    * confs.
+    */
+  private def inferenceConf(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.contains("parquet") || k.startsWith("spark.sql.files.") || k.startsWith("spark.sql.sources.") ||
+        k == "spark.sql.caseSensitive"
     }
 
   private val SchemaCacheMax = 1024

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -249,8 +249,7 @@ object SimilarityOps {
     * deterministic and canonicalized), so `ivf_assign`'s bench time measures
     * assignment only instead of silently including the one-time k-means run.
     */
-  def ivfCentroidsDF(emb: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
-    val spark = emb.sparkSession
+  def ivfCentroidsDF(spark: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
     val rows = for {
       (c, i) <- centroids.zipWithIndex.toSeq

@@ -1,6 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact duplicated-span removal with document reconstruction — the
@@ -22,15 +23,18 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one projection builds the token arrays; spans are a per-row
   * generator (transform over sequence — no shuffle); the ONLY corpus-sized
-  * exchanges are the span groupBy (map-side combinable min/count) and the
-  * join of span occurrences back to their keeper, both hash-partitioned on
-  * the span string. The cut span starts of each document are grouped once
-  * (bounded by |removals|) and left-joined onto its token-array row, where
-  * the kept positions are `array_except(sequence(0, n-1), cut)` — linear
-  * in the document's tokens plus cuts, never a tokens × cuts scan — and
+  * exchange is the one window over the span rows partitioned by the span
+  * string, which tags each occurrence with its span's keeper. A span that
+  * occurs once is its own keeper, so the occurrences that are not their
+  * keeper are exactly the cuts. One pass over the spans does this; a keeper
+  * aggregate joined back to the spans would generate them twice on a
+  * one-partition input, where no exchange is left for Spark to reuse. The
+  * cut span starts of each document are grouped once (bounded by
+  * |removals|) and left-joined onto its token-array row, where the kept
+  * positions are `array_except(sequence(0, n-1), cut)` — linear in the
+  * document's tokens plus cuts, never a tokens × cuts scan — and
   * `text_kept` is rebuilt from the array in-row. No token-level explode, no
-  * anti-join and no regroup of surviving tokens; nothing is ever |docs|²
-  * and no window scans the raw token stream.
+  * anti-join and no regroup of surviving tokens; nothing is ever |docs|².
   *
   * Determinism: the keeper is a pure min over the (doc_id, pos) struct,
   * exact for every bigint id; kept positions follow `sequence` order, so
@@ -44,25 +48,26 @@ object SpanDedup {
     val toks = graft.Tables.widen(docs0)
       .select(col("doc_id"), split(TextOps.lowerSimple(col("text")), " ").as("ts"))
 
-    // per-row span generator: start positions 0..len-k, k tokens re-joined
+    // per-row span generator: start positions 0..len-k, k tokens re-joined;
+    // none for a document of fewer than k tokens or a NULL text. The length
+    // test is in the generator: a `where` on it would be pushed below the
+    // projection with `ts` copied in, tokenizing every row twice
     val spans = toks
-      .where(size(col("ts")) >= k)
       .select(
         col("doc_id"),
         explode(expr(
-          s"transform(sequence(0, size(ts) - $k), i -> struct(i AS pos, array_join(slice(ts, i + 1, $k), ' ') AS s))"
+          s"IF(size(ts) >= $k, transform(sequence(0, size(ts) - $k), " +
+            s"i -> struct(i AS pos, array_join(slice(ts, i + 1, $k), ' ') AS s)), NULL)"
         )).as("x"))
       .select(col("doc_id"), col("x.pos").as("pos"), col("x.s").as("s"))
 
-    // global first occurrence per span string — map-side-combinable min
-    val keeper = spans
-      .groupBy(col("s"))
-      .agg(min(struct(col("doc_id"), col("pos"))).as("keep"), count(lit(1)).as("occ"))
-
-    // non-first occurrences of duplicated spans: each document's cut starts
+    // each occurrence tagged with its span's first occurrence; the others
+    // are the non-first occurrences of duplicated spans: each document's
+    // cut starts
+    val occ = struct(col("doc_id"), col("pos"))
     val cuts = spans
-      .join(keeper.where(col("occ") > 1), Seq("s"))
-      .where(struct(col("doc_id"), col("pos")) =!= col("keep"))
+      .select(col("doc_id"), col("pos"), min(occ).over(Window.partitionBy(col("s"))).as("keep"))
+      .where(occ =!= col("keep"))
       .groupBy(col("doc_id"))
       .agg(collect_list(col("pos")).as("starts"))
 

@@ -73,8 +73,44 @@ object TextOps {
 
   private def tokens(c: Column): Column = split(lowerSimple(c), " ")
 
-  private def markerHits(c: Column, markers: Seq[String]): Column =
-    size(filter(tokens(c), t => t.isInCollection(markers)))
+  /** The hits of `markers` in the token array `ts` ([[tokens]]). */
+  private def markerHits(ts: Column, markers: Seq[String]): Column =
+    size(filter(ts, t => t.isInCollection(markers)))
+
+  /** One score column `s_<lang>` per language of [[langMarkers]]: the hits
+    * of its markers in the token array `ts`.
+    */
+  private def markerScores(ts: Column): Seq[Column] =
+    langMarkers.map { case (l, ms) => markerHits(ts, ms).as(s"s_$l") }
+
+  /** The largest score of [[markerScores]]' columns. */
+  private def maxScore: Column = greatest(langPriority.map(l => col(s"s_$l")): _*)
+
+  /** The first language in [[langPriority]] order whose score of
+    * [[markerScores]]' columns is [[maxScore]], 'und' when no marker hits.
+    */
+  private def predLang: Column =
+    langPriority.reverse.foldLeft(lit("und")) { (acc, l) =>
+      when(col(s"s_$l") === maxScore && maxScore > 0, lit(l)).otherwise(acc)
+    }
+
+  /** The per-row counts of [[quality]]'s signals other than `stop_hits`. */
+  private def qualityCounts: Seq[Column] = Seq(
+    size(regexp_extract_all(col("text"), lit(TokenRe), lit(0))).cast("long").as("n_tokens"),
+    size(regexp_extract_all(col("text"), lit(PunctRe), lit(0))).cast("long").as("punct_count"),
+    length(col("text")).cast("long").as("n_chars_measured"))
+
+  private def punctRatio: Column =
+    when(col("n_chars_measured") > 0, col("punct_count").cast("double") / col("n_chars_measured"))
+      .otherwise(0.0)
+
+  /** [[quality]]'s class over the columns of [[qualityCounts]] and the
+    * English marker hits `stopHits`.
+    */
+  private def qualityClass(stopHits: Column): Column =
+    when(col("n_tokens") >= 20 && stopHits >= 1 && punctRatio < 0.1, "good")
+      .when(col("n_tokens") >= 5, "fair")
+      .otherwise("poor")
 
   // --- token counting -------------------------------------------------------
 
@@ -575,22 +611,12 @@ object TextOps {
     * language, argmax with [[langPriority]] tie-break, 'und' when no marker
     * hits at all. Pure per-row computation — no shuffle.
     */
-  def langId(docs: DataFrame): DataFrame = {
-    val scores = langMarkers.map { case (l, ms) => l -> markerHits(col("text"), ms) }
-    val maxScore = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    // first language (in priority order) whose score equals the max
-    val pred = scores.reverse.foldLeft(lit("und")) { case (acc, (l, s)) =>
-      when(s === maxScore && maxScore > 0, lit(l)).otherwise(acc)
-    }
+  def langId(docs: DataFrame): DataFrame =
     graft.Tables.widen(docs)
-      .select(
-        col("doc_id"),
-        col("lang"),
-        pred.as("pred_lang"),
-        maxScore.cast("long").as("marker_hits")
-      )
+      .select(col("doc_id"), col("lang"), tokens(col("text")).as("ts"))
+      .select(col("doc_id") +: col("lang") +: markerScores(col("ts")): _*)
+      .select(col("doc_id"), col("lang"), predLang.as("pred_lang"), maxScore.cast("long").as("marker_hits"))
       .orderBy("doc_id")
-  }
 
   def oracleLangId: String = {
     def hitExpr(ms: Seq[String]): String = {
@@ -619,36 +645,34 @@ object TextOps {
     * integer counts or exact int/int divisions, so the class boundaries are
     * bit-deterministic across engines.
     */
-  def quality(docs: DataFrame): DataFrame = {
-    val toks  = size(regexp_extract_all(col("text"), lit(TokenRe), lit(0))).cast("long")
-    val punct = size(regexp_extract_all(col("text"), lit(PunctRe), lit(0))).cast("long")
-    val stops = markerHits(col("text"), langMarkers.head._2).cast("long") // en markers
-    val len   = length(col("text")).cast("long")
-    val base = graft.Tables.widen(docs).select(
-      col("doc_id"),
-      toks.as("n_tokens"),
-      punct.as("punct_count"),
-      stops.as("stop_hits"),
-      len.as("n_chars_measured")
-    )
-    base
-      .withColumn(
-        "stop_ratio",
+  def quality(docs: DataFrame): DataFrame =
+    graft.Tables.widen(docs)
+      .select(
+        col("doc_id") +: qualityCounts :+
+          markerHits(tokens(col("text")), langMarkers.head._2).cast("long").as("stop_hits"): _*)
+      .select(
+        col("doc_id"), col("n_tokens"), col("punct_count"), col("stop_hits"), col("n_chars_measured"),
         when(col("n_tokens") > 0, col("stop_hits").cast("double") / col("n_tokens")).otherwise(0.0)
-      )
-      .withColumn(
-        "punct_ratio",
-        when(col("n_chars_measured") > 0, col("punct_count").cast("double") / col("n_chars_measured"))
-          .otherwise(0.0)
-      )
-      .withColumn(
-        "quality_class",
-        when(col("n_tokens") >= 20 && col("stop_hits") >= 1 && col("punct_ratio") < 0.1, "good")
-          .when(col("n_tokens") >= 5, "fair")
-          .otherwise("poor")
-      )
+          .as("stop_ratio"),
+        punctRatio.as("punct_ratio"),
+        qualityClass(col("stop_hits")).as("quality_class"))
       .orderBy("doc_id")
-  }
+
+  /** [[quality]]'s `n_tokens` and `quality_class` beside [[langId]]'s
+    * `lang` and `pred_lang`, per document, from one projection over one
+    * read of `docs`: `text` is tokenized once for all five marker scores,
+    * and the English score is [[quality]]'s `stop_hits`. Row order is
+    * unspecified.
+    */
+  def qualityAndLang(docs: DataFrame): DataFrame =
+    graft.Tables.widen(docs)
+      .select(col("doc_id") +: col("lang") +: tokens(col("text")).as("ts") +: qualityCounts: _*)
+      .select(
+        Seq(col("doc_id"), col("lang"), col("n_tokens"), col("punct_count"), col("n_chars_measured")) ++
+          markerScores(col("ts")): _*)
+      .select(
+        col("doc_id"), col("lang"), col("n_tokens"),
+        qualityClass(col(s"s_${langPriority.head}")).as("quality_class"), predLang.as("pred_lang"))
 
   def oracleQuality: String = {
     val enSet = langMarkers.head._2.map(m => s"'$m'").mkString(", ")

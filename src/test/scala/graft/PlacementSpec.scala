@@ -67,6 +67,16 @@ class PlacementSpec extends AnyFunSuite {
     assert(trainerWidth(dir) == 1)
   }
 
+  test("no consumer of the one-partition documents artifact coalesces its scan again") {
+    val consumers = Seq("bigram_scores", "curated", "dedup_clusters", "dsir_top", "dsir_weights",
+      "source_kl", "spandedup").map(_ + "_documents")
+    val again = """Coalesce 1\n[ :]*\+- (\*\(\d+\) )?Scan ExistingRDD""".r
+    for (name <- consumers) {
+      val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+      assert(again.findFirstIn(plan).isEmpty, s"$name coalesces the artifact again:\n$plan")
+    }
+  }
+
   test("every curation and pair query returns the same rows on both paths") {
     for (name <- names) {
       val small = SparkEntry.queries(name)(spark, dir)

@@ -53,7 +53,7 @@ class ScanBudgetSpec extends AnyFunSuite {
     "curated_documents" -> (0, 0),
     "datasheet_documents" -> (5, 8),
     "deciles_customer" -> (1, 1),
-    "decontaminated_documents" -> (5, 8),
+    "decontaminated_documents" -> (4, 6),
     "dedup_clusters_documents" -> (0, 0),
     "dedup_exact_documents" -> (1, 2),
     "diff_documents" -> (3, 15),

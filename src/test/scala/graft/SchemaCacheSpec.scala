@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.io.Sources
 
 /** The parquet schema cache behind `Sources.readParquet` and `Tables.load`:
-  * a repeat read of unchanged files plans with no Spark job, a changed SQL
-  * conf infers again, and the reads it does not cache (globs) or caches
+  * a repeat read of unchanged files plans with no Spark job, a changed
+  * parquet inference conf infers again and any other conf (AQE, say) does
+  * not, and the reads it does not cache (globs) or caches
   * across a partitioned layout return what an uncached read returns.
   * Rewrites of a table are covered in `ProfileServerSpec`, which checks
   * `Tables.load` and `/profile` together.
@@ -40,6 +41,34 @@ class SchemaCacheSpec extends AnyFunSuite {
     try assert(orderDate() == TimestampType)
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(orderDate() == TimestampNTZType)
+  }
+
+  /** A new session with every runtime conf of [[spark]]. */
+  private def sameConf() = {
+    val clone = spark.newSession()
+    for ((k, v) <- spark.conf.getAll if spark.conf.isModifiable(k)) clone.conf.set(k, v)
+    clone
+  }
+
+  test("a session clone that differs only in AQE reuses the cached schema") {
+    val clone = sameConf()
+    clone.conf.set("spark.sql.adaptive.enabled", (!spark.conf.get("spark.sql.adaptive.enabled").toBoolean).toString)
+    val first = Tables.load(spark, dir, "embeddings")
+    var again: DataFrame = null
+    val jobs = SparkTestBase.jobsOf { again = Tables.load(clone, dir, "embeddings") }.groups
+    assert(jobs.isEmpty, s"the clone's load ran ${jobs.size} jobs")
+    assert(again.schema == first.schema)
+  }
+
+  test("a session clone that differs in a parquet inference conf infers again") {
+    val clone = sameConf()
+    clone.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    // lineitem: the test above cached orders under this conf
+    Tables.load(spark, dir, "lineitem")
+    var again: DataFrame = null
+    val jobs = SparkTestBase.jobsOf { again = Tables.load(clone, dir, "lineitem") }.groups
+    assert(jobs.nonEmpty, "the clone's load reused a schema inferred under another inference conf")
+    assert(again.schema("l_shipdate").dataType == TimestampType)
   }
 
   test("a glob path returns what an uncached read returns") {
